@@ -10,6 +10,17 @@ aggregation per superstep, i.e. Pregel-on-DataFrames).
 
 Scale design (the part GDS does in closed-source memory):
 
+- A loop whose state is provably small runs in ONE Spark task.  The
+  rank family (:func:`_rank_loop`) and :func:`connected_components`
+  count their stationary edge table (and vertex table) while
+  materializing it; when both fit one partition (``_ONE_TASK_ROWS``
+  rows, the bound at which :func:`_sized_partitions` already keeps a
+  table in one partition) the tagged vertex/edge/teleport rows are
+  coalesced into one partition and :func:`_one_task_loop` runs every
+  superstep in a numpy kernel behind one ``mapInArrow`` -- one job
+  instead of one (or more) per superstep.  This is the trade graph at
+  every scale (25 vertices) and the verified near-dup pair graph.
+  Larger inputs keep the distributed loop below.
 - Per-iteration lineage grows unboundedly; we ``localCheckpoint`` every
   ``checkpoint_every`` supersteps to truncate it, and those are the
   ONLY driver actions in the loop -- the dangling-mass total is folded
@@ -31,6 +42,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 from ..sources import assert_unique_key, read_table
 from .relational import dsum
@@ -142,7 +154,15 @@ def build_trade_graph(spark: SparkSession, sf_dir: str) -> Graph:
 
 
 
-def _sized_partitions(df: DataFrame, rows_per_partition: int = 100_000) -> DataFrame:
+#: rows per partition of a stationary table (:func:`_sized_partitions`),
+#: and the gate of the one-task loops: a loop whose counted vertex and
+#: stationary edge tables both hold at most this many rows runs every
+#: superstep in one task (:func:`_one_task_loop`)
+_ONE_TASK_ROWS = 100_000
+
+
+def _sized_partitions(df: DataFrame,
+                      rows_per_partition: int = _ONE_TASK_ROWS) -> DataFrame:
     """Partition an (already materialized) stationary table in
     proportion to its size: a 600-edge local graph becomes 1 partition
     (every superstep stage = 1 task instead of 32 near-empty ones); a
@@ -157,9 +177,154 @@ def _sized_partitions(df: DataFrame, rows_per_partition: int = 100_000) -> DataF
     return df.repartition(target).localCheckpoint()
 
 
-#: sentinel destination that collects dangling mass inside the regular
-#: superstep aggregate (never a real vertex id -- NUL prefix)
-_DANGLING_DST = "\x00__dangling__"
+def _one_task_loop(kernel, verts: DataFrame, edges: DataFrame,
+                   value: str, value_type=None, weight=None,
+                   teleport: DataFrame | None = None) -> DataFrame:
+    """Run a whole superstep loop as ONE Spark task.
+
+    The loop's inputs are unioned as tagged rows ``(tag, src, dst, w)``
+    -- tag 0: a vertex ``id`` in ``src``; tag 1: an ``edges`` row
+    (``src``, ``dst``, optional ``weight``); tag 2: a ``teleport`` row
+    (``id``, ``tele`` in ``w``) -- coalesced into one partition and
+    handed to ``kernel`` through ``mapInArrow``.  The task
+    dictionary-encodes every id (nulls included) and calls
+    ``kernel(tag, s, d, w, dic, ok)`` with numpy positions into the
+    dictionary ``dic`` (``ok``: the position holds a non-null id; a
+    null ``w`` reads 0.0).  The kernel runs every superstep and returns
+    ``(rows, values)``: dictionary positions of the output ids and an
+    Arrow array of their values.  Ids keep the vertex id's own type.
+    ``kernel`` must be a closure (see :func:`_rank_kernel`): closures
+    pickle by value, so executors need not import this package.
+
+    The result is lazy: the loop runs in the final action's job.
+    Callers gate on ``_ONE_TASK_ROWS`` -- the whole loop state must fit
+    one Python task."""
+    id_type = verts.schema["id"].dataType
+    no_id = F.lit(None).cast(id_type)
+    no_w = F.lit(None).cast("double")
+
+    def tagged(tag, df, src, dst, w):
+        return df.select(F.lit(tag).cast("tinyint").alias("tag"),
+                         F.col(src).cast(id_type).alias("src"),
+                         (F.col(dst).cast(id_type) if dst else no_id)
+                         .alias("dst"),
+                         (F.col(w).cast("double") if w else no_w)
+                         .alias("w"))
+
+    rows = tagged(0, verts, "id", None, None).union(
+        tagged(1, edges, "src", "dst", weight))
+    if teleport is not None:
+        rows = rows.union(tagged(2, teleport, "id", None, "tele"))
+    schema = StructType([StructField("id", id_type),
+                         StructField(value, value_type or id_type)])
+
+    def run(batches):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        batches = list(batches)
+        if not batches:
+            return
+        tab = pa.Table.from_batches(batches)
+        n = tab.num_rows
+        enc = pc.dictionary_encode(
+            pa.concat_arrays([tab["src"].combine_chunks(),
+                              tab["dst"].combine_chunks()]),
+            null_encoding="encode")
+        idx = enc.indices.to_numpy(zero_copy_only=False)
+        dic = enc.dictionary
+        out, vals = kernel(
+            tab["tag"].to_numpy(), idx[:n], idx[n:],
+            pc.fill_null(tab["w"], 0.0).to_numpy(),
+            dic, pc.is_valid(dic).to_numpy(zero_copy_only=False))
+        yield pa.RecordBatch.from_arrays(
+            [dic.take(pa.array(out, pa.int64())), vals], ["id", value])
+
+    return rows.coalesce(1).mapInArrow(run, schema)
+
+
+def _rank_kernel(damping: float, max_iter: int, n: int,
+                 personalized: bool):
+    """:func:`_rank_loop`'s supersteps as a :func:`_one_task_loop`
+    kernel.  Same math, step for step: edges with a null endpoint
+    dropped, 0-share self edges for every vertex, one (v, sentinel,
+    1.0) edge per dangling vertex, ``contrib`` = the per-``dst`` sum of
+    ``rank * share`` over edges whose ``src`` holds a rank, and the
+    next ranks are exactly the aggregate's ids (minus the sentinel; for
+    personalized ranks, those with a teleport row)."""
+    def kernel(tag, s, d, w, dic, ok):
+        import numpy as np
+        import pyarrow as pa
+        k = len(dic)
+        sent = k  # the dangling sentinel's position
+        v, t = s[tag == 0], s[tag == 2]
+        e = (tag == 1) & ok[s] & ok[d]
+        has_out = np.zeros(k, bool)
+        has_out[s[e]] = True
+        live = v[ok[v]]  # a null vertex id never joins an edge
+        dang = live[~has_out[live]]
+        src = np.concatenate([s[e], live, dang])
+        dst = np.concatenate([d[e], live, np.full(len(dang), sent)])
+        share = np.concatenate([w[e], np.zeros(len(live)),
+                                np.ones(len(dang))])
+
+        rank = np.zeros(k + 1)
+        has_rank = np.zeros(k + 1, bool)
+        if personalized:
+            tele = np.zeros(k + 1)
+            tele[t] = w[tag == 2]
+            is_tele = np.zeros(k + 1, bool)
+            is_tele[t[ok[t]]] = True
+            has_rank[t], rank[t] = True, tele[t]
+        else:
+            has_rank[v], rank[v] = True, 1.0 / n
+        for _ in range(max_iter):
+            m = has_rank[src]
+            ms, md = src[m], dst[m]
+            contrib = np.bincount(md, weights=rank[ms] * share[m],
+                                  minlength=k + 1)
+            has_rank = np.zeros(k + 1, bool)
+            has_rank[md] = True
+            dm = contrib[sent]
+            has_rank[sent] = False
+            if personalized:
+                has_rank &= is_tele
+                rank = ((1.0 - damping) * tele
+                        + damping * (contrib + dm * tele))
+            else:
+                rank = (1.0 - damping) / n + damping * (contrib + dm / n)
+        out = np.flatnonzero(has_rank)
+        return out, pa.array(rank[out])
+    return kernel
+
+
+def _cc_kernel(max_iter: int):
+    """:func:`connected_components`' supersteps as a
+    :func:`_one_task_loop` kernel: synchronous min-label propagation
+    over the undirected edges between vertices, at most ``max_iter``
+    steps, stopping at the fixpoint.  Labels are positions in the id
+    type's own sort order, so the minimum is the id type's minimum (a
+    long stays a long; strings compare bytewise, as Spark does)."""
+    def kernel(tag, s, d, w, dic, ok):
+        import numpy as np
+        import pyarrow.compute as pc
+        v = s[tag == 0]
+        is_v = np.zeros(len(dic), bool)
+        is_v[v[ok[v]]] = True
+        e = tag == 1
+        keep = is_v[s[e]] & is_v[d[e]]
+        a = np.concatenate([s[e][keep], d[e][keep]])
+        b = np.concatenate([d[e][keep], s[e][keep]])
+        order = pc.sort_indices(dic).to_numpy().astype(np.int64)
+        label = np.empty_like(order)
+        label[order] = np.arange(len(order))
+        for _ in range(max_iter):
+            new = label.copy()
+            np.minimum.at(new, b, label[a])
+            if np.array_equal(new, label):
+                break
+            label = new
+        return v, dic.take(order[label[v]])
+    return kernel
 
 
 def _superstep_mode(spark: SparkSession, small: bool) -> None:
@@ -237,8 +402,9 @@ def _small_loop_mode(spark: SparkSession, small: bool,
     prior = {k: spark.conf.get(k) for k in keys}
     _superstep_mode(spark, True)
     from ..session import conf_flip
+    # an empty stationary table has 0 partitions; the width must be >= 1
     conf_flip(spark, "spark.sql.shuffle.partitions",
-              str(width_df.rdd.getNumPartitions()))
+              str(max(1, width_df.rdd.getNumPartitions())))
 
     def restore() -> None:
         for k, v in prior.items():
@@ -264,9 +430,11 @@ def _rank_loop(verts: DataFrame, edges_share: DataFrame, n: int,
     - every vertex gets a 0-share SELF-edge, so the per-``dst``
       aggregate covers all vertices (zero in-degree included) and the
       old per-step ``verts`` left-join disappears;
-    - every dangling vertex gets one (src, _DANGLING_DST, 1.0) edge,
-      so its whole rank arrives as the sentinel row of the SAME
-      aggregate.  The per-iteration plan then references ``ranks``
+    - every dangling vertex gets one (src, NULL, 1.0) edge, so its
+      whole rank arrives as the null-id sentinel row of the SAME
+      aggregate (edges with a null endpoint are dropped up front, so
+      the sentinel is never a real edge's destination, whatever the id
+      type).  The per-iteration plan then references ``ranks``
       exactly once -- the old semi-join dangling sum referenced it
       twice, doubling the plan per superstep (2^k analyzer blowup) and
       forcing per-step checkpoints.  The sentinel's value is spread
@@ -286,13 +454,29 @@ def _rank_loop(verts: DataFrame, edges_share: DataFrame, n: int,
     the (1-d) restart mass and the dangling mass land on ``tele``
     instead of everywhere.  It joins the vertex-sized aggregate once
     per superstep as a stationary broadcast; the single-``ranks``-
-    reference invariant that keeps the plan linear is untouched."""
+    reference invariant that keeps the plan linear is untouched.
+
+    Small graphs skip all of the above: counting the stationary edge
+    table materializes it (lazy checkpoint + count, one job), and when
+    it and the ``n`` vertices both fit ``_ONE_TASK_ROWS`` rows the whole
+    loop runs as one task (:func:`_one_task_loop` + :func:`_rank_kernel`,
+    the same math on numpy arrays; the result is lazy).  Only larger
+    graphs run the distributed supersteps."""
+    # stationary all supersteps; the gate's count materializes it
+    edges_share = (edges_share
+                   .where(F.col("src").isNotNull()
+                          & F.col("dst").isNotNull())
+                   .localCheckpoint(eager=False))
+    if edges_share.count() <= _ONE_TASK_ROWS and n <= _ONE_TASK_ROWS:
+        kernel = _rank_kernel(damping, max_iter, n, teleport is not None)
+        return _one_task_loop(kernel, verts, edges_share, out_name,
+                              DoubleType(), weight="share",
+                              teleport=teleport)
     if teleport is not None:
         teleport = teleport.select("id", "tele").localCheckpoint()
         ranks = teleport.select("id", F.col("tele").alias("rank"))
     else:
         ranks = verts.select("id", F.lit(1.0 / n).alias("rank"))
-    edges_share = edges_share.localCheckpoint()  # stationary all supersteps
     has_out = edges_share.select(F.col("src").alias("id")).distinct()
     # lazy checkpoint + count: the count materializes the checkpoint
     # in the SAME job (an eager checkpoint would run one job to copy
@@ -305,7 +489,8 @@ def _rank_loop(verts: DataFrame, edges_share: DataFrame, n: int,
     if n_dangling:
         synth = synth.unionByName(
             dangling.select(F.col("id").alias("src"),
-                            F.lit(_DANGLING_DST).alias("dst"),
+                            F.lit(None).cast(edges_share.schema["dst"]
+                                             .dataType).alias("dst"),
                             F.lit(1.0).alias("share")))
     edges_share = _sized_partitions(
         edges_share.unionByName(synth).localCheckpoint())
@@ -314,26 +499,7 @@ def _rank_loop(verts: DataFrame, edges_share: DataFrame, n: int,
     # plausibly fits executor memory (~24B/row); past that it must
     # SHUFFLE onto the stationary src-partitioned edge table
     small_vector = n <= 10_000_000
-    spark = verts.sparkSession
-    _superstep_mode(spark, small_vector)
-    # scale-adaptive reduce width for the superstep aggregate (round
-    # 12, guide §2.2): when the stationary edge table sits in ONE
-    # partition (_sized_partitions put it there because the graph is
-    # tiny), the per-superstep exchange at the session default (= core
-    # count) launches that many near-empty reduce tasks 20 times over
-    # -- pure scheduler latency with AQE off.  One map partition means
-    # the partial aggregate already emits exactly one row per key, so
-    # ANY reduce partitioning merges exactly one partial per key: the
-    # double-sum reduction order is pinned and the shrink is
-    # numerically neutral by construction (this is the same argument
-    # that made _superstep_mode safe).  A big graph keeps multiple
-    # edge partitions and never enters this branch; the conf is
-    # restored right after the loop (every loop segment is planned
-    # in-builder by the eager=False checkpoints below).
-    shuffle_restore = None
-    if small_vector and edges_share.rdd.getNumPartitions() == 1:
-        shuffle_restore = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "1")
+    _superstep_mode(verts.sparkSession, small_vector)
 
     for i in range(max_iter):
         rhs = F.broadcast(ranks) if small_vector else ranks
@@ -352,10 +518,10 @@ def _rank_loop(verts: DataFrame, edges_share: DataFrame, n: int,
             # the dm broadcast-collect job materialize (and cache)
             # the aggregate in the same pass its first consumer runs
             contribs = contribs.localCheckpoint(eager=False)
-            dm = (contribs.where(F.col("id") == _DANGLING_DST)
+            dm = (contribs.where(F.col("id").isNull())
                   .agg(F.coalesce(F.max("contrib"), F.lit(0.0))
                        .alias("__dm")))
-            contribs = (contribs.where(F.col("id") != _DANGLING_DST)
+            contribs = (contribs.where(F.col("id").isNotNull())
                         .crossJoin(F.broadcast(dm)))
         else:
             contribs = contribs.withColumn("__dm", F.lit(0.0))
@@ -376,13 +542,10 @@ def _rank_loop(verts: DataFrame, edges_share: DataFrame, n: int,
         # the dangling path already materializes once per superstep;
         # the periodic checkpoint only serves the no-dangling path.
         # The final iteration always checkpoints so the LAST loop
-        # segment is physically planned here in the builder, while the
-        # shuffle-width shrink above is still in effect.
+        # segment is physically planned here in the builder.
         if not n_dangling and ((i + 1) % checkpoint_every == 0
                                or i == max_iter - 1):
             ranks = ranks.localCheckpoint(eager=False)
-    if shuffle_restore is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", shuffle_restore)
     return ranks.withColumnRenamed("rank", out_name)
 
 
@@ -525,14 +688,28 @@ def connected_components(graph: Graph, max_iter: int = 50) -> DataFrame:
     fixpoint test is a 1-row count of changed labels.  (The
     large-star/small-star algorithm halves superstep count for
     pathological chains; min-propagation is the simple, shuffle-
-    minimal default.)"""
-    ue = undirected_edges(graph.edges).localCheckpoint()
-    both = ue.union(ue.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    # lazy checkpoint + count: the small-loop gate's count materializes
-    # the label table in the same job (guide §1/§5)
+    minimal default.)
+
+    Small graphs run the whole loop as one task: the gate's counts
+    materialize the undirected edge table and the label table (lazy
+    checkpoint + count, one job each), and when both fit
+    ``_ONE_TASK_ROWS`` rows :func:`_one_task_loop` + :func:`_cc_kernel`
+    propagate the same labels with the same ``max_iter`` and fixpoint
+    (the result is lazy; ids and labels keep the vertex id's type).
+    Only larger graphs run the distributed supersteps."""
+    # lazy checkpoint + count: each gate count materializes its table
+    # in the same job (guide §1/§5)
+    ue = undirected_edges(graph.edges).localCheckpoint(eager=False)
     labels = graph.vertices.select(
         "id", F.col("id").alias("component")).localCheckpoint(eager=False)
-    small = labels.count() <= 10_000_000
+    n_labels = labels.count()
+    if ue.count() <= _ONE_TASK_ROWS and n_labels <= _ONE_TASK_ROWS:
+        return _one_task_loop(_cc_kernel(max_iter), labels,
+                              ue.select(F.col("a").alias("src"),
+                                        F.col("b").alias("dst")),
+                              "component")
+    both = ue.union(ue.select(F.col("b").alias("a"), F.col("a").alias("b")))
+    small = n_labels <= 10_000_000
     _b, _restore = _small_loop_mode(ue.sparkSession, small, ue)
 
     for _ in range(max_iter):

@@ -71,7 +71,7 @@ def plan_audit(df: DataFrame) -> PlanAudit:
         has_broadcast="Broadcast" in simple,
         has_sort_merge="SortMergeJoin" in simple,
         python_row_udf="BatchEvalPython" in simple,
-        arrow_pandas=("MapInPandas" in simple
+        arrow_pandas=("MapInPandas" in simple or "MapInArrow" in simple
                       or "ArrowEvalPython" in simple),
         exchanges=simple.count("Exchange "),
     )

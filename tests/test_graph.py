@@ -737,3 +737,65 @@ def test_temporal_reachability_certificates(spark):
         assert a >= seed_arr
         senders = by_bucket.get(a, set()) - {u}
         assert any(s in arr and arr[s] <= a for s in senders), (u, a)
+
+
+def test_one_task_kernels_match_distributed_loops(spark, monkeypatch):
+    """The one-task kernels (the small-graph path of _rank_loop and
+    connected_components) reproduce the distributed supersteps: ranks
+    to 1e-12 relative, components exactly, ids keep their long type.
+    The graph has long ids, dangling vertices (8, 9), an isolated
+    vertex (10), a chain longer than CC's max_iter=3 and an edge-free
+    twin.  Gate observability: the kernel plan holds exactly one
+    MapInArrow, the forced-distributed plan none."""
+    from pyspark.sql.types import LongType
+
+    from graphdb_cia_factbook_spark.operators import graph as gmod
+    from graphdb_cia_factbook_spark.plans import explain_str
+    from graphdb_cia_factbook_spark.session import clear_scratch
+
+    v = spark.createDataFrame([(i,) for i in range(1, 11)], "id bigint")
+    e = spark.createDataFrame(
+        [(1, 2, 3.0), (2, 3, 1.0), (3, 1, 2.0), (3, 4, 5.0), (4, 5, 1.0),
+         (5, 6, 1.0), (6, 7, 2.0), (7, 8, 1.0), (2, 9, 4.0)],
+        "src bigint, dst bigint, amount double")
+    g = Graph(v, e)
+    g0 = Graph(v, e.limit(0))
+    cases = {
+        "pagerank": lambda g: gmod.pagerank(g, max_iter=7),
+        "pagerank_w": lambda g: gmod.pagerank(g, max_iter=7, weighted=True),
+        "articlerank": lambda g: gmod.articlerank(g, max_iter=7),
+        "ppr": lambda g: gmod.personalized_pagerank(g, [9, 1], max_iter=7),
+        "cc3": lambda g: gmod.connected_components(g, max_iter=3),
+        "cc": lambda g: gmod.connected_components(g),
+    }
+
+    def run():
+        out = {}
+        for name, fn in cases.items():
+            for tag, graph in (("", g), ("0", g0)):
+                df = fn(graph)
+                assert isinstance(df.schema["id"].dataType, LongType), name
+                out[name + tag] = (dict(df.collect()),
+                                   explain_str(df, "simple")
+                                   .count("MapInArrow"))
+        return out
+
+    kernel = run()
+    monkeypatch.setattr(gmod, "_ONE_TASK_ROWS", 0)
+    distributed = run()
+    clear_scratch(spark)
+
+    for name, (got, n_arrow) in kernel.items():
+        want, n_dist = distributed[name]
+        assert (n_arrow, n_dist) == (1, 0), name
+        assert set(got) == set(range(1, 11)), name
+        if name.startswith("cc"):
+            assert got == want, name
+            assert all(isinstance(c, int) for c in got.values()), name
+        else:
+            for k in want:
+                assert got[k] == pytest.approx(want[k], rel=1e-12,
+                                               abs=0), (name, k)
+    # the short chain really is unconverged, and the full run is not
+    assert kernel["cc3"][0][8] == 5 and kernel["cc"][0][8] == 1
+    assert kernel["cc0"][0] == {i: i for i in range(1, 11)}

@@ -73,14 +73,22 @@ def test_ann_brute_broadcasts_queries(spark, queries):
 
 def test_no_python_row_udfs_in_catalyst_paths(spark, queries):
     """Everything except the explicitly-Arrow multimodal path must stay
-    JVM-side: no BatchEvalPython (row-at-a-time Python) anywhere, and
-    mapInPandas only in the mm_* queries."""
-    # skip builders that EXECUTE on construction (power iteration and
-    # the checkpointed dedup pipelines) -- they are pure Catalyst +
-    # localCheckpoint by construction and cost minutes to build here
-    eager = {"g1_pagerank", "g1_pagerank_weighted", "g2_articlerank",
-             "llm_minhash_lsh", "llm_ngram_jaccard",
+    JVM-side: no BatchEvalPython (row-at-a-time Python) anywhere,
+    mapInPandas only in the mm_* queries, and mapInArrow only in the
+    named one-task graph loop entries."""
+    # skip builders that EXECUTE on construction (the checkpointed
+    # dedup pipelines) -- they are pure Catalyst + localCheckpoint by
+    # construction and cost minutes to build here
+    eager = {"llm_minhash_lsh", "llm_ngram_jaccard",
              "agg_skyline", "agg_equidepth_histogram"}
+    # the one-task graph loops (operators.graph._one_task_loop): on
+    # small graphs the rank family and connected components run every
+    # superstep in ONE mapInArrow task -- these entries return that
+    # kernel's output, so their plans hold exactly one MapInArrow
+    one_task_loops = {"g1_pagerank", "g1_pagerank_weighted",
+                      "g2_articlerank", "g_ppr", "g_connected_components",
+                      "llm_dedup_clusters", "llm_dedup_keep_best",
+                      "er_golden_record"}
     for name, fn in queries.items():
         if name in eager:
             continue
@@ -93,6 +101,7 @@ def test_no_python_row_udfs_in_catalyst_paths(spark, queries):
         # billions-of-pairs GEMM without materializing the pairs)
         if not name.startswith("mm_") and name != "llm_bitext_mining":
             assert "MapInPandas" not in plan, name
+        assert plan.count("MapInArrow") == (name in one_task_loops), name
         # udaf_weighted_median is the registered applyInPandas UDAF
         # surface (PLAN_BUDGET-pinned python: 1) -- it has always
         # planned as FlatMapGroupsInPandas, by design

@@ -49,15 +49,14 @@ def test_no_top_level_array_or_map_outputs(spark):
     scalar top-level columns only: explode to long form or
     ``array_join`` to a string before returning.
 
-    Builders that EXECUTE on construction (power iteration, the
-    checkpointed dedup pipelines) are skipped here for suite-runtime
+    Builders that EXECUTE on construction (the checkpointed dedup
+    pipelines) are skipped here for suite-runtime
     reasons; their scalar output schemas are pinned by their own
     oracle rows (a DuckDB hash compare cannot even run on an
     array column without the canonicalizer the driver lacks)."""
     from pyspark.sql.types import ArrayType, MapType
     sf = "/root/testdata/sf0.001"
-    eager = {"g1_pagerank", "g1_pagerank_weighted", "g2_articlerank",
-             "llm_minhash_lsh", "llm_ngram_jaccard"}
+    eager = {"llm_minhash_lsh", "llm_ngram_jaccard"}
     bad = []
     for name, fn in registry.queries().items():
         if name in eager:

@@ -16,8 +16,10 @@ scale-discipline metrics:
 - ``broadcasts``-- BroadcastExchange nodes (cheap at 100 TB only while
   the broadcast side is dimension-sized; a regression from 0 is worth
   reviewing);
-- ``python``    -- Arrow/Python eval nodes (MapInPandas etc.; only the
-  mm_* multimodal entries may have any).
+- ``python``    -- Arrow/Python eval nodes (MapInPandas, MapInArrow
+  etc.; only the whitelisted entries of
+  tests/test_plans.test_no_python_row_udfs_in_catalyst_paths may have
+  any).
 
 Against ``PLAN_BUDGET.json`` (checked in), any entry whose scans,
 shuffles, or python count EXCEEDS its budget fails -- the shape of the
@@ -26,10 +28,10 @@ join-back (extra scan + exchange) or a Python fallback into a Catalyst
 path.  Counts BELOW budget print as improvements; ``--update`` rewrites
 the budget (review the diff in git).
 
-Builders that EXECUTE supersteps on construction (power iteration,
-checkpointed dedup pipelines) return lineage-truncated plans whose
-counts are legal but meaningless; they are skipped with a note, same
-set as tests/test_plans.py.
+Builders that EXECUTE on construction (the checkpointed dedup
+pipelines) return lineage-truncated plans whose counts are legal but
+meaningless; they are skipped with a note, same set as
+tests/test_plans.py.
 
 Usage: python tools/plan_budget.py [--update] [sf_dir] [name ...]
 Exit 1 on any budget excess (or, without --update, on entries missing
@@ -55,12 +57,12 @@ BUDGET_PATH = os.path.join(os.path.dirname(os.path.dirname(
 #: intermediate, so their visible counts are partial (the eager
 #: customer-join / histogram stage is invisible): skipped rather than
 #: stamped, per this file's own 'legal but meaningless' rule.
-EAGER = {"g1_pagerank", "g1_pagerank_weighted", "g2_articlerank",
-         "llm_minhash_lsh", "llm_ngram_jaccard",
+EAGER = {"llm_minhash_lsh", "llm_ngram_jaccard",
          "agg_skyline", "agg_equidepth_histogram"}
 
 PY_NODES = ("BatchEvalPython", "ArrowEvalPython", "MapInPandas",
-            "FlatMapGroupsInPandas", "FlatMapGroupsInPandasWithState")
+            "MapInArrow", "FlatMapGroupsInPandas",
+            "FlatMapGroupsInPandasWithState")
 
 
 def _explain(df, mode: str) -> str:
