@@ -12,15 +12,17 @@ Scale design (the part GDS does in closed-source memory):
 
 - A loop whose state is provably small runs in ONE Spark task.  The
   rank family (:func:`_rank_loop`) and :func:`connected_components`
-  count their stationary edge table (and vertex table) while
-  materializing it; when both fit one partition (``_ONE_TASK_ROWS``
-  rows, the bound at which :func:`_sized_partitions` already keeps a
-  table in one partition) the tagged vertex/edge/teleport rows are
-  coalesced into one partition and :func:`_one_task_loop` runs every
-  superstep in a numpy kernel behind one ``mapInArrow`` -- one job
-  instead of one (or more) per superstep.  This is the trade graph at
-  every scale (25 vertices) and the verified near-dup pair graph.
-  Larger inputs keep the distributed loop below.
+  materialize their tagged vertex/edge/teleport rows in one eager
+  checkpoint whose ``Observation`` counts the vertices and edges in
+  the same job (:func:`_loop_input`, the gate's only job).  When both
+  fit one partition (``_ONE_TASK_ROWS`` rows, the bound at which
+  :func:`_sized_partitions` already keeps a table in one partition)
+  the checkpoint is coalesced into one partition and
+  :func:`_one_task_loop` runs every superstep in a numpy kernel behind
+  one ``mapInArrow`` -- one job instead of one (or more) per
+  superstep.  This is the trade graph at every scale (25 vertices) and
+  the verified near-dup pair graph.  Larger inputs keep the
+  distributed loop below, reading their tables from that checkpoint.
 - Per-iteration lineage grows unboundedly; we ``localCheckpoint`` every
   ``checkpoint_every`` supersteps to truncate it, and those are the
   ONLY driver actions in the loop -- the dangling-mass total is folded
@@ -177,28 +179,24 @@ def _sized_partitions(df: DataFrame,
     return df.repartition(target).localCheckpoint()
 
 
-def _one_task_loop(kernel, verts: DataFrame, edges: DataFrame,
-                   value: str, value_type=None, weight=None,
-                   teleport: DataFrame | None = None) -> DataFrame:
-    """Run a whole superstep loop as ONE Spark task.
+def _loop_input(verts: DataFrame, edges: DataFrame, weight=None,
+                teleport: DataFrame | None = None
+                ) -> tuple[DataFrame, int, int]:
+    """Materialize a superstep loop's inputs once, counted in the same
+    job: the gate of :func:`_one_task_loop`.
 
-    The loop's inputs are unioned as tagged rows ``(tag, src, dst, w)``
-    -- tag 0: a vertex ``id`` in ``src``; tag 1: an ``edges`` row
-    (``src``, ``dst``, optional ``weight``); tag 2: a ``teleport`` row
-    (``id``, ``tele`` in ``w``) -- coalesced into one partition and
-    handed to ``kernel`` through ``mapInArrow``.  The task
-    dictionary-encodes every id (nulls included) and calls
-    ``kernel(tag, s, d, w, dic, ok)`` with numpy positions into the
-    dictionary ``dic`` (``ok``: the position holds a non-null id; a
-    null ``w`` reads 0.0).  The kernel runs every superstep and returns
-    ``(rows, values)``: dictionary positions of the output ids and an
-    Arrow array of their values.  Ids keep the vertex id's own type.
-    ``kernel`` must be a closure (see :func:`_rank_kernel`): closures
-    pickle by value, so executors need not import this package.
-
-    The result is lazy: the loop runs in the final action's job.
-    Callers gate on ``_ONE_TASK_ROWS`` -- the whole loop state must fit
-    one Python task."""
+    The inputs are unioned as tagged rows ``(tag, src, dst, w)`` -- tag
+    0: a vertex ``id`` in ``src``; tag 1: an ``edges`` row (``src``,
+    ``dst``, optional ``weight``); tag 2: a ``teleport`` row (``id``,
+    ``tele`` in ``w``) -- with ids cast to the vertex id's type.  One
+    eager ``localCheckpoint`` materializes the union while an
+    ``Observation`` counts its vertex and edge rows (the Pregel-style
+    materialize-and-count), so the gate costs exactly that job.
+    Returns ``(rows, n_verts, n_edges)``: a loop whose counts both fit
+    ``_ONE_TASK_ROWS`` passes ``rows`` to :func:`_one_task_loop`; a
+    larger one reads its tables back with :func:`_tagged`, so nothing
+    is computed twice."""
+    from pyspark.sql import Observation
     id_type = verts.schema["id"].dataType
     no_id = F.lit(None).cast(id_type)
     no_w = F.lit(None).cast("double")
@@ -215,6 +213,39 @@ def _one_task_loop(kernel, verts: DataFrame, edges: DataFrame,
         tagged(1, edges, "src", "dst", weight))
     if teleport is not None:
         rows = rows.union(tagged(2, teleport, "id", None, "tele"))
+    obs = Observation()
+    rows = rows.observe(
+        obs, F.count_if(F.col("tag") == 0).alias("n_verts"),
+        F.count_if(F.col("tag") == 1).alias("n_edges")
+    ).localCheckpoint(eager=True)
+    counts = obs.get
+    return rows, counts["n_verts"], counts["n_edges"]
+
+
+def _tagged(rows: DataFrame, tag: int, *cols) -> DataFrame:
+    """One input table of a :func:`_loop_input` union."""
+    return rows.where(F.col("tag") == tag).select(*cols)
+
+
+def _one_task_loop(kernel, rows: DataFrame, value: str,
+                   value_type=None) -> DataFrame:
+    """Run a whole superstep loop as ONE Spark task.
+
+    ``rows`` is a :func:`_loop_input` checkpoint, coalesced into one
+    partition and handed to ``kernel`` through ``mapInArrow``.  The
+    task dictionary-encodes every id (nulls included) and calls
+    ``kernel(tag, s, d, w, dic, ok)`` with numpy positions into the
+    dictionary ``dic`` (``ok``: the position holds a non-null id; a
+    null ``w`` reads 0.0).  The kernel runs every superstep and returns
+    ``(rows, values)``: dictionary positions of the output ids and an
+    Arrow array of their values.  Ids keep the vertex id's own type.
+    ``kernel`` must be a closure (see :func:`_rank_kernel`): closures
+    pickle by value, so executors need not import this package.
+
+    The result is lazy: the loop runs in the final action's job.
+    Callers gate on ``_ONE_TASK_ROWS`` -- the whole loop state must fit
+    one Python task."""
+    id_type = rows.schema["src"].dataType
     schema = StructType([StructField("id", id_type),
                          StructField(value, value_type or id_type)])
 
@@ -412,7 +443,7 @@ def _small_loop_mode(spark: SparkSession, small: bool,
     return F.broadcast, restore
 
 
-def _rank_loop(verts: DataFrame, edges_share: DataFrame, n: int,
+def _rank_loop(verts: DataFrame, edges_share: DataFrame,
                damping: float, max_iter: int, checkpoint_every: int,
                out_name: str, teleport: DataFrame | None = None) -> DataFrame:
     """Shared power-iteration driver.  ``edges_share`` must carry
@@ -456,24 +487,27 @@ def _rank_loop(verts: DataFrame, edges_share: DataFrame, n: int,
     per superstep as a stationary broadcast; the single-``ranks``-
     reference invariant that keeps the plan linear is untouched.
 
-    Small graphs skip all of the above: counting the stationary edge
-    table materializes it (lazy checkpoint + count, one job), and when
-    it and the ``n`` vertices both fit ``_ONE_TASK_ROWS`` rows the whole
-    loop runs as one task (:func:`_one_task_loop` + :func:`_rank_kernel`,
-    the same math on numpy arrays; the result is lazy).  Only larger
-    graphs run the distributed supersteps."""
-    # stationary all supersteps; the gate's count materializes it
-    edges_share = (edges_share
-                   .where(F.col("src").isNotNull()
-                          & F.col("dst").isNotNull())
-                   .localCheckpoint(eager=False))
-    if edges_share.count() <= _ONE_TASK_ROWS and n <= _ONE_TASK_ROWS:
+    Small graphs skip all of the above.  The gate
+    (:func:`_loop_input`) materializes the vertices, the stationary
+    edges and the teleport vector in one observed checkpoint job, which
+    also counts the ``n`` vertices and the edges; when both fit
+    ``_ONE_TASK_ROWS`` rows the whole loop runs as one task
+    (:func:`_one_task_loop` + :func:`_rank_kernel`, the same math on
+    numpy arrays; the result is lazy).  Only larger graphs run the
+    distributed supersteps, over tables read back from that
+    checkpoint."""
+    rows, n, n_edges = _loop_input(
+        verts, edges_share.where(F.col("src").isNotNull()
+                                 & F.col("dst").isNotNull()),
+        weight="share", teleport=teleport)
+    if n <= _ONE_TASK_ROWS and n_edges <= _ONE_TASK_ROWS:
         kernel = _rank_kernel(damping, max_iter, n, teleport is not None)
-        return _one_task_loop(kernel, verts, edges_share, out_name,
-                              DoubleType(), weight="share",
-                              teleport=teleport)
+        return _one_task_loop(kernel, rows, out_name, DoubleType())
+    verts = _tagged(rows, 0, F.col("src").alias("id"))
+    edges_share = _tagged(rows, 1, "src", "dst", F.col("w").alias("share"))
     if teleport is not None:
-        teleport = teleport.select("id", "tele").localCheckpoint()
+        teleport = _tagged(rows, 2, F.col("src").alias("id"),
+                           F.col("w").alias("tele"))
         ranks = teleport.select("id", F.col("tele").alias("rank"))
     else:
         ranks = verts.select("id", F.lit(1.0 / n).alias("rank"))
@@ -560,10 +594,6 @@ def pagerank(graph: Graph, damping: float = 0.85, max_iter: int = 20,
     default matches; ``weighted=True`` exposes the variant the
     reference author probably intended.
     """
-    # lazy checkpoint: count() materializes it in the same job
-    verts = graph.vertices.select("id").localCheckpoint(eager=False)
-    n = verts.count()
-
     weight = (F.col("amount") if weighted and "amount" in graph.edges.columns
               else F.lit(1.0))
     edges = graph.edges.select("src", "dst", weight.cast("double").alias("w"))
@@ -571,8 +601,8 @@ def pagerank(graph: Graph, damping: float = 0.85, max_iter: int = 20,
     edges_share = (edges.join(out_w, "src")
                    .select("src", "dst",
                            (F.col("w") / F.col("out_w")).alias("share")))
-    return _rank_loop(verts, edges_share, n, damping, max_iter,
-                      checkpoint_every, "pagerank")
+    return _rank_loop(graph.vertices.select("id"), edges_share, damping,
+                      max_iter, checkpoint_every, "pagerank")
 
 
 def personalized_pagerank(graph: Graph, sources: list,
@@ -594,9 +624,8 @@ def personalized_pagerank(graph: Graph, sources: list,
     mass, so scores would stop summing to 1 with no error -- rejected
     up front with one small count."""
     assert len(set(sources)) == len(sources), "duplicate ppr sources"
-    # lazy checkpoint: count() materializes it in the same job
+    # lazy checkpoint: the presence count materializes it in its job
     verts = graph.vertices.select("id").localCheckpoint(eager=False)
-    n = verts.count()
     n_found = verts.where(F.col("id").isin(sources)).count()
     missing = len(sources) - n_found
     assert missing == 0, (
@@ -614,7 +643,7 @@ def personalized_pagerank(graph: Graph, sources: list,
     edges_share = (edges.join(out_w, "src")
                    .select("src", "dst",
                            (F.col("w") / F.col("out_w")).alias("share")))
-    return _rank_loop(verts, edges_share, n, damping, max_iter,
+    return _rank_loop(verts, edges_share, damping, max_iter,
                       checkpoint_every, "ppr", teleport=tele)
 
 
@@ -638,7 +667,7 @@ def articlerank(graph: Graph, damping: float = 0.85, max_iter: int = 20,
                    .select("src", "dst",
                            (F.lit(1.0) / (F.col("out_deg") + F.lit(avg_out_deg)))
                            .alias("share")))
-    return _rank_loop(verts, edges_share, n, damping, max_iter,
+    return _rank_loop(verts, edges_share, damping, max_iter,
                       checkpoint_every, "articlerank")
 
 
@@ -690,24 +719,23 @@ def connected_components(graph: Graph, max_iter: int = 50) -> DataFrame:
     pathological chains; min-propagation is the simple, shuffle-
     minimal default.)
 
-    Small graphs run the whole loop as one task: the gate's counts
-    materialize the undirected edge table and the label table (lazy
-    checkpoint + count, one job each), and when both fit
-    ``_ONE_TASK_ROWS`` rows :func:`_one_task_loop` + :func:`_cc_kernel`
-    propagate the same labels with the same ``max_iter`` and fixpoint
-    (the result is lazy; ids and labels keep the vertex id's type).
-    Only larger graphs run the distributed supersteps."""
-    # lazy checkpoint + count: each gate count materializes its table
-    # in the same job (guide §1/§5)
-    ue = undirected_edges(graph.edges).localCheckpoint(eager=False)
-    labels = graph.vertices.select(
-        "id", F.col("id").alias("component")).localCheckpoint(eager=False)
-    n_labels = labels.count()
-    if ue.count() <= _ONE_TASK_ROWS and n_labels <= _ONE_TASK_ROWS:
-        return _one_task_loop(_cc_kernel(max_iter), labels,
-                              ue.select(F.col("a").alias("src"),
-                                        F.col("b").alias("dst")),
-                              "component")
+    Small graphs run the whole loop as one task: the gate
+    (:func:`_loop_input`) materializes the vertices and the undirected
+    edge table in one observed checkpoint job that also counts them,
+    and when both fit ``_ONE_TASK_ROWS`` rows :func:`_one_task_loop` +
+    :func:`_cc_kernel` propagate the same labels with the same
+    ``max_iter`` and fixpoint (the result is lazy; ids and labels keep
+    the vertex id's type).  Only larger graphs run the distributed
+    supersteps, over tables read back from that checkpoint."""
+    ue = undirected_edges(graph.edges)
+    rows, n_labels, n_edges = _loop_input(
+        graph.vertices, ue.select(F.col("a").alias("src"),
+                                  F.col("b").alias("dst")))
+    if n_labels <= _ONE_TASK_ROWS and n_edges <= _ONE_TASK_ROWS:
+        return _one_task_loop(_cc_kernel(max_iter), rows, "component")
+    labels = _tagged(rows, 0, F.col("src").alias("id"),
+                     F.col("src").alias("component"))
+    ue = _tagged(rows, 1, F.col("src").alias("a"), F.col("dst").alias("b"))
     both = ue.union(ue.select(F.col("b").alias("a"), F.col("a").alias("b")))
     small = n_labels <= 10_000_000
     _b, _restore = _small_loop_mode(ue.sparkSession, small, ue)

@@ -4,8 +4,9 @@ The reference declares one dtype map covering every column in the system
 (``di_types``, /root/reference/preprocess_upload_neo4j.py:83-97) and
 passes it to every read -- schemas are *fixed and explicit*, never
 inferred.  We mirror that: every table the engine touches has a
-StructType here, and all scans go through :mod:`..sources` which
-enforces it.
+StructType here, and all scans go through :mod:`..sources`, which
+reads each file's schema from its parquet footer (no Spark inference
+job) and checks its column names against this registry.
 
 Two families:
 
@@ -13,7 +14,10 @@ Two families:
   goods / grouping / population tables) used by the pipeline-parity
   tests.  ``year`` stays DoubleType for parity (the reference keeps it
   float because of NaNs, preprocess_upload_neo4j.py:87).
-- ``TESTDATA``: the driver's synthetic TPC-H-ish tables.
+- ``TESTDATA``: the driver's synthetic TPC-H-ish tables.  Their dates
+  are stored as parquet TIMESTAMP without UTC adjustment, which Spark
+  reads as ``TIMESTAMP_NTZ`` (an older ``events`` flavor stored
+  TIMESTAMP(NANOS); ``sources.read_table`` normalizes it).
 """
 
 from __future__ import annotations
@@ -122,7 +126,7 @@ TESTDATA = {
         T.StructField("o_custkey", T.LongType()),
         T.StructField("o_orderstatus", T.StringType()),
         T.StructField("o_totalprice", T.DoubleType()),
-        T.StructField("o_orderdate", T.TimestampType()),
+        T.StructField("o_orderdate", T.TimestampNTZType()),
         T.StructField("o_orderpriority", T.StringType()),
     ]),
     "lineitem": T.StructType([
@@ -136,11 +140,11 @@ TESTDATA = {
         T.StructField("l_tax", T.DoubleType()),
         T.StructField("l_returnflag", T.StringType()),
         T.StructField("l_linestatus", T.StringType()),
-        T.StructField("l_shipdate", T.TimestampType()),
+        T.StructField("l_shipdate", T.TimestampNTZType()),
     ]),
     "events": T.StructType([
         T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.TimestampType()),
+        T.StructField("ts", T.TimestampNTZType()),
         T.StructField("user_id", T.LongType()),
         T.StructField("event_type", T.StringType()),
         T.StructField("value", T.DoubleType()),

@@ -21,6 +21,15 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Half the host's physical memory, capped at 48g: the JVM heap
+    grows with GC timing, and a heap allowed past physical memory gets
+    the process OOM-killed instead of collected (``SPARK_DRIVER_MEM``
+    overrides)."""
+    mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
+    return f"{min(48 * 1024, mb)}m"
+
+
 def get_spark(app_name: str = "graphdb_cia_factbook_spark",
               shuffle_partitions: int | None = None) -> SparkSession:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
@@ -37,7 +46,8 @@ def get_spark(app_name: str = "graphdb_cia_factbook_spark",
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM") or _default_driver_memory())
         # whole-stage codegen emits a class per stage; a long session
         # (60+ queries) fills the default 240m JIT code cache, after
         # which HotSpot stops compiling and everything runs interpreted

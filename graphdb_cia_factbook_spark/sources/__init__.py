@@ -9,9 +9,12 @@ scrape_cia.py:86-87); its graph sink is a per-row Cypher ``MERGE`` loop
 - S1 from_records: driver-collected records -> DataFrame with explicit
   schema (the scrape stage's list-of-dicts -> frame boundary).
 - S2 typed scans: parquet (testdata) / CSV with declared StructType;
-  schemas never inferred.  Parquet scans get predicate pushdown and
-  column pruning from Catalyst for free -- at 100 TB this is the
-  difference between reading 2 columns and reading 40.
+  schemas never inferred by a Spark job.  A parquet file's schema is
+  read from its footer on the driver (:func:`parquet_schema`) and
+  handed to the reader, so a scan plans with no job at all.  Parquet
+  scans get predicate pushdown and column pruning from Catalyst for
+  free -- at 100 TB this is the difference between reading 2 columns
+  and reading 40.
 - S3/S5 sinks: bulk ``DataFrameWriter`` overwrite (idempotent
   insert-overwrite replaces MERGE upsert: dedup-by-key *before* the
   write, see :func:`merge_upsert_by_key`).
@@ -31,29 +34,67 @@ from pyspark.sql import types as T
 from ..schemas import TESTDATA
 
 
+def _footer_schema(path: str) -> T.StructType:
+    """Convert a parquet footer the way Spark's inference does (see
+    :func:`parquet_schema`); TypeError for a type with no mapping."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_type
+    pf = pq.ParquetFile(path)
+    int96 = {pf.schema.column(i).path for i in range(len(pf.schema))
+             if pf.schema.column(i).physical_type == "INT96"}
+    fields = []
+    for f in pf.schema_arrow:
+        if f.name in int96:
+            dt = T.TimestampType()
+        elif pa.types.is_timestamp(f.type) and f.type.unit == "ns":
+            dt = T.LongType()
+        else:
+            dt = from_arrow_type(f.type, prefer_timestamp_ntz=True)
+        fields.append(T.StructField(f.name, dt))  # nullable, as Spark reads
+    return T.StructType(fields)
+
+
+def parquet_schema(spark: SparkSession, path: str) -> T.StructType:
+    """The schema Spark infers for the parquet at ``path``.
+
+    Spark's own inference runs one job per scan to read a footer.  For a
+    single local file we read that footer on the driver instead
+    (microseconds, no engine) and convert it the way Spark does:
+    ``TIMESTAMP`` without UTC adjustment is ``TIMESTAMP_NTZ``, INT96 is
+    ``TIMESTAMP``, and INT64 ``TIMESTAMP(NANOS)`` -- which Spark cannot
+    read as a timestamp -- is ``LongType`` holding the raw nanos
+    (what ``legacy.parquet.nanosAsLong`` would infer; with the type
+    declared, Spark reads the nanos with that flag off).  A directory,
+    a remote URI or a type with no Arrow mapping falls back to Spark's
+    inference."""
+    if os.path.isfile(path):
+        try:
+            return _footer_schema(path)
+        except TypeError:
+            pass
+    return spark.read.parquet(path).schema
+
+
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """S2: schema-checked parquet scan of a driver testdata table.
 
-    ``events.ts`` is written as parquet TIMESTAMP(NANOS), which Spark's
-    vectorized reader rejects; we read it as raw nanos
-    (``legacy.parquet.nanosAsLong``) and truncate to microseconds with
-    integer DIV (double division would lose precision above 2^53).
-    DuckDB oracles match via ``CAST(ts AS TIMESTAMP)`` (ns->us floor).
-    """
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        if dict(df.dtypes).get("ts") == "bigint":
-            df = df.withColumn(
-                "ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-        return df
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    The schema comes from :func:`parquet_schema` (the footer, no Spark
+    job) and must name the columns ``TESTDATA`` declares.  ``events.ts``
+    stored as TIMESTAMP(NANOS) reads as raw nanos and is truncated to
+    microseconds with integer DIV (double division would lose
+    precision above 2^53); DuckDB oracles match via
+    ``CAST(ts AS TIMESTAMP)`` (ns->us floor)."""
+    path = f"{sf_dir}/{name}.parquet"
+    schema = parquet_schema(spark, path)
     expected = TESTDATA.get(name)
     if expected is not None:
-        got = {f.name for f in df.schema.fields}
-        want = {f.name for f in expected.fields}
+        got, want = set(schema.fieldNames()), set(expected.fieldNames())
         if got != want:
             raise ValueError(f"{name}: schema drift, got {got}, want {want}")
+    df = spark.read.schema(schema).parquet(path)
+    if name == "events" and isinstance(schema["ts"].dataType, T.LongType):
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
     return df
 
 

@@ -34,16 +34,16 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..operators.relational import davg, dsum
 from ..schemas import TESTDATA
+from ..sources import parquet_schema
 
 def _events_schema(spark: SparkSession, sf_dir: str) -> T.StructType:
-    """The ``events`` schema AS STORED, probed from one batch read: a
-    file-source stream needs a declared schema, and the driver's
-    testdata has shipped ``ts`` both as TIMESTAMP(NANOS) (reads as
-    long under ``legacy.parquet.nanosAsLong``) and as plain micros
-    TIMESTAMP_NTZ across rounds -- hardcoding either silently
+    """The ``events`` schema AS STORED, read from the parquet footer
+    (``sources.parquet_schema``, no Spark job): a file-source stream
+    needs a declared schema, and the driver's testdata has shipped
+    ``ts`` both as TIMESTAMP(NANOS) (declared as long) and as plain
+    micros TIMESTAMP_NTZ across rounds -- hardcoding either silently
     misscales every timestamp when the other shows up."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    return parquet_schema(spark, f"{sf_dir}/events.parquet")
 
 
 def stream_events(spark: SparkSession, sf_dir: str,
@@ -97,9 +97,7 @@ def stream_documents(spark: SparkSession, sf_dir: str,
     the streaming-ingest twin of the batch corpus, for running the
     curation surface (fingerprint dedup, quality gates) as documents
     ARRIVE instead of after a full crawl lands."""
-    import os
-    schema = spark.read.parquet(
-        os.path.join(sf_dir, "documents.parquet")).schema
+    schema = parquet_schema(spark, f"{sf_dir}/documents.parquet")
     reader = (spark.readStream.schema(schema)
               .option("pathGlobFilter", "documents.parquet"))
     if max_files_per_trigger:

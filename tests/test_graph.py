@@ -799,3 +799,35 @@ def test_one_task_kernels_match_distributed_loops(spark, monkeypatch):
     # the short chain really is unconverged, and the full run is not
     assert kernel["cc3"][0][8] == 5 and kernel["cc"][0][8] == 1
     assert kernel["cc0"][0] == {i: i for i in range(1, 11)}
+
+
+def test_one_task_gate_is_one_job(spark):
+    """The one-task gate costs one Spark job: building pagerank or
+    connected components runs only the observed checkpoint of the
+    tagged loop input (no separate vertex or edge count).  AQE is off
+    for the check because AQE runs every shuffle stage of the input
+    plan as its own job; without it the checkpoint is exactly one."""
+    from graphdb_cia_factbook_spark.operators import graph as gmod
+    from graphdb_cia_factbook_spark.session import clear_scratch
+
+    v = spark.createDataFrame([(i,) for i in range(1, 11)], "id bigint")
+    e = spark.createDataFrame(
+        [(1, 2, 3.0), (2, 3, 1.0), (3, 1, 2.0), (3, 4, 5.0), (7, 8, 1.0)],
+        "src bigint, dst bigint, amount double")
+    g = Graph(v, e)
+    sc = spark.sparkContext
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        for name, build in (("pagerank", gmod.pagerank),
+                            ("cc", gmod.connected_components)):
+            group = f"test_one_task_gate_is_one_job_{name}"
+            sc.setJobGroup(group, group)
+            df = build(g)
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1, name
+            assert df.count() == 10, name
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+        clear_scratch(spark)

@@ -276,3 +276,90 @@ def test_observed_write_single_pass_metrics(spark, tmp_path):
         F.sum(F.col("o_totalprice").cast("decimal(27,4)"))
         .cast("double")).first()[0]
     assert abs(got["total"] - recount) < 1e-6
+
+
+def test_footer_schema_is_what_spark_infers(spark, tmp_path):
+    """For every testdata table the driver-side footer schema equals
+    Spark's own inference and the declared registry schema (``events.ts``
+    may be stored as micros TIMESTAMP_NTZ or as nanos read as long).  A
+    legacy INT96 timestamp file reads as TIMESTAMP, as Spark infers."""
+    import os
+
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
+    from graphdb_cia_factbook_spark.sources import parquet_schema
+    int96 = str(tmp_path / "int96.parquet")
+    pq.write_table(pq.read_table(f"{SF}/orders.parquet"), int96,
+                   use_deprecated_int96_timestamps=True)
+    assert parquet_schema(spark, int96) == spark.read.parquet(int96).schema
+    assert parquet_schema(spark, int96)["o_orderdate"].dataType == \
+        T.TimestampType()
+    names = sorted(f[:-len(".parquet")] for f in os.listdir(SF)
+                   if f.endswith(".parquet"))
+    assert set(TESTDATA) <= set(names)
+    for name in names:
+        path = f"{SF}/{name}.parquet"
+        got = parquet_schema(spark, path)
+        assert got == spark.read.parquet(path).schema, name
+        want = TESTDATA[name]
+        if name == "events" and isinstance(got["ts"].dataType, T.LongType):
+            want = T.StructType([
+                T.StructField(f.name, T.LongType()) if f.name == "ts" else f
+                for f in want.fields])
+        assert got == want, name
+
+
+def test_read_table_runs_no_spark_job(spark):
+    """A single-file table plans from its footer: building the scan
+    runs no schema-inference job."""
+    sc = spark.sparkContext
+    group = "test_read_table_runs_no_spark_job"
+    sc.setJobGroup(group, group)
+    try:
+        for name in TESTDATA:
+            read_table(spark, SF, name)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_nanos_events_read_as_truncated_micros(spark, tmp_path):
+    """An ``events`` file written as parquet TIMESTAMP(NANOS) reads to
+    the micro-truncated timestamps (integer DIV of the raw nanos), with
+    ``legacy.parquet.nanosAsLong`` left unset in the session."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+    t = pq.read_table(f"{SF}/events.parquet")
+    micros = pc.cast(t["ts"], pa.int64())
+    nanos = pc.add(pc.multiply(micros, 1000),
+                   pa.array([i % 1000 for i in range(t.num_rows)],
+                            pa.int64()))
+    t = t.set_column(t.schema.get_field_index("ts"), "ts",
+                     pc.cast(nanos, pa.timestamp("ns")))
+    pq.write_table(t, str(tmp_path / "events.parquet"))
+    assert pq.ParquetFile(str(tmp_path / "events.parquet")) \
+        .schema.column(t.schema.get_field_index("ts")) \
+        .logical_type.to_json().count("nanoseconds") == 1
+
+    def micros_by_id(sf_dir):
+        df = read_table(spark, sf_dir, "events")
+        ts = F.unix_micros(F.col("ts").cast("timestamp"))
+        return dict(df.select("event_id", ts).collect())
+
+    got = micros_by_id(str(tmp_path))
+    assert got == micros_by_id(SF)
+    assert got == dict(zip(t["event_id"].to_pylist(), micros.to_pylist()))
+    assert spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "false"
+
+
+def test_spark_written_directory_still_reads(spark, tmp_path):
+    """A table stored as a Spark-written (partitioned) parquet directory
+    is not a single file: it keeps Spark's own schema inference."""
+    nation = read_table(spark, SF, "nation")
+    nation.write.partitionBy("n_regionkey").parquet(
+        str(tmp_path / "nation.parquet"))
+    back = read_table(spark, str(tmp_path), "nation")
+    assert sorted(back.select(*nation.columns).collect()) == \
+        sorted(nation.collect())
