@@ -87,12 +87,6 @@ def split_goods_list(col: Column) -> Column:
     return F.transform(F.split(head, ","), lambda x: F.trim(x))
 
 
-def clean_trailing_comma(col: Column) -> Column:
-    """F7: ``re.sub(r",\\s+\\(", " (", t)`` -- trailing-comma cleanup
-    before the year paren (scrape_cia.py:112)."""
-    return F.regexp_replace(col, r",\s+\(", " (")
-
-
 def parse_population(col: Column) -> tuple[Column, Column]:
     """F8: the stateful digit-group scan (scrape_cia.py:256-280).
 

@@ -23,6 +23,11 @@ Scale design (the part GDS does in closed-source memory):
   superstep.  This is the trade graph at every scale (25 vertices) and
   the verified near-dup pair graph.  Larger inputs keep the
   distributed loop below, reading their tables from that checkpoint.
+- A distributed loop over small per-step state runs inside
+  ``with _small_loop_mode(...)`` (the rank loop: ``scoped_conf``):
+  AQE off, a narrow shuffle width and explicit broadcasts for the loop
+  only.  The caller's session confs come back when the block exits,
+  also when the loop raises.
 - Per-iteration lineage grows unboundedly; we ``localCheckpoint`` every
   ``checkpoint_every`` supersteps to truncate it, and those are the
   ONLY driver actions in the loop -- the dangling-mass total is folded
@@ -40,12 +45,15 @@ Scale design (the part GDS does in closed-source memory):
 from __future__ import annotations
 
 import warnings
+from collections.abc import Iterator
+from contextlib import contextmanager
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
 
+from ..session import local_cpus, scoped_conf
 from ..sources import assert_unique_key, read_table
 from .relational import dsum
 
@@ -171,9 +179,7 @@ def _sized_partitions(df: DataFrame,
     1e9-edge graph keeps cluster width.  The count is free -- callers
     pass a localCheckpoint'd frame."""
     n = df.count()
-    import os
-    width = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
-    target = max(1, min(width, n // rows_per_partition + 1))
+    target = max(1, min(local_cpus(), n // rows_per_partition + 1))
     if df.rdd.getNumPartitions() == target:
         return df  # already the right width: skip a copy job (§1/§5)
     return df.repartition(target).localCheckpoint()
@@ -358,89 +364,42 @@ def _cc_kernel(max_iter: int):
     return kernel
 
 
-def _superstep_mode(spark: SparkSession, small: bool) -> None:
-    """Turn AQE off for a SMALL iterative loop.
-
-    AQE materializes and re-plans every exchange it meets; in a
-    superstep loop over a small graph that is pure driver latency --
-    one re-plan round trip per superstep exchange, measured ~50ms x 20
-    supersteps = 1.2s of the 3.3s PageRank loop at bench scale (loop
-    alone: 3.3s AQE-on -> 2.1s AQE-off, min of 3).  For LARGE inputs
-    AQE stays on: runtime coalescing of the vertex-sized aggregate and
-    skew splitting are worth a re-plan when partitions carry real
-    bytes.  Numerically neutral here: callers gate on inputs small
-    enough that the stationary edge table sits in one partition
-    (``_sized_partitions``), so every per-vertex partial aggregate is
-    already computed in a single task and the reduce-side sum tree is
-    unchanged by partition-count choices.
-
-    The flip is session-level by necessity (per-plan AQE is not a
-    DataFrame property): it goes through ``session.conf_flip``, which
-    records the PRIOR value so that session hygiene restores exactly
-    that value at every query boundary (``session.clear_scratch``,
-    which ``registry._prepare_session`` runs at each entry and
-    bench.py runs after each timed action).  Library callers that
-    invoke pagerank/_rank_loop directly outside the registry should
-    call ``clear_scratch`` after materializing the ranks, or AQE stays
-    off for the rest of their session.
-
-    Loop-shape invariant (round-11 measured, do not undo): AQE-off is
-    a WIN only for loops whose per-superstep join is an EXPLICIT
-    broadcast (the rank family: the vertex vector is broadcast by
-    hand, so the static planner already emits the right join).  The
-    BFS / Borůvka / temporal-relay loops join stats-less checkpointed
-    frontiers; they NEED AQE's runtime broadcast conversion (the
-    static planner falls back to SortMergeJoin) and measured
-    1.33-1.89x WORSE with AQE off.  Keep AQE on for any loop that does
-    not broadcast its iterate explicitly."""
-    if small:
-        from ..session import conf_flip
-        conf_flip(spark, "spark.sql.adaptive.enabled", "false")
-
-
+@contextmanager
 def _small_loop_mode(spark: SparkSession, small: bool,
-                     width_df: DataFrame):
-    """The small-iterative-loop diet (round 12), shared by Borůvka and
-    the BFS family: when the loop's per-step state is provably small,
-    (a) AQE goes off for the query (:func:`_superstep_mode` -- its
-    per-exchange materialize+re-plan round trips are pure driver
-    latency on tiny supersteps), (b) the static shuffle width follows
-    the materialized stationary table instead of the core count (near-
-    empty reduce tasks otherwise dominate; restored at the query
-    boundary via ``session.conf_flip``), and (c) the returned wrapper
-    puts an EXPLICIT broadcast hint on the loop's vertex/frontier-
-    sized join sides.  The hints are what make AQE-off safe: round
-    11's negative result ("AQE-off makes BFS/Borůvka loops 1.33-1.89x
-    worse") was measured WITHOUT them, so the stats-less checkpointed
-    frontiers fell back to SortMergeJoin; with the hints the static
-    plan is already the one AQE would have converged to, minus the
-    re-planning.  Width-shrink safety: every aggregate inside the
-    gated loops is an integer/struct MIN, COUNT, SUM(long) or
-    DISTINCT -- reduction-order-exact at any partition count.  A big
-    input fails the ``small`` gate and keeps AQE + cluster width.
+                     width_df: DataFrame) -> Iterator:
+    """The small-iterative-loop diet, scoped to a ``with`` block: when
+    the loop's per-step state is provably small, the block runs with
+    (a) AQE off -- AQE materializes and re-plans every exchange it
+    meets, one round trip per superstep exchange, which is pure driver
+    latency on tiny supersteps -- and (b) the static shuffle width
+    following the materialized stationary ``width_df`` (at least 1)
+    instead of the core count, whose near-empty reduce tasks otherwise
+    dominate.  The block gets (c) a hint function that puts an
+    EXPLICIT broadcast on the loop's vertex/frontier-sized join sides.
+    A big input fails the ``small`` gate: the block then keeps the
+    session's settings and the hint is the identity.
 
-    Returns ``(hint, restore)``: callers whose loop executes every
-    superstep in-builder (the BFS family: isEmpty materializes each
-    hop) call ``restore()`` right after the loop so the REST of the
-    query -- e.g. betweenness's closure joins, which want AQE's
-    runtime broadcasts -- plans at the session's normal settings
-    (measured: leaving the diet on for the whole query cost more than
-    the loop saved).  conf_flip still backstops the exception path at
-    the query boundary."""
-    if not small:
-        return (lambda df: df), (lambda: None)
-    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
-    prior = {k: spark.conf.get(k) for k in keys}
-    _superstep_mode(spark, True)
-    from ..session import conf_flip
-    # an empty stationary table has 0 partitions; the width must be >= 1
-    conf_flip(spark, "spark.sql.shuffle.partitions",
-              str(max(1, width_df.rdd.getNumPartitions())))
+    AQE-off is safe ONLY with the explicit broadcasts: the loops join
+    stats-less checkpointed frontiers, for which the static planner
+    falls back to SortMergeJoin, and AQE-off without the hints
+    measured 1.33-1.89x worse on the BFS / Borůvka / temporal-relay
+    loops; with the hints the static plan is the one AQE would have
+    converged to, minus the re-planning.  Width shrinking is
+    reduction-order-exact: every aggregate inside the gated loops is an
+    integer/struct MIN, COUNT, SUM(long) or DISTINCT.
 
-    def restore() -> None:
-        for k, v in prior.items():
-            spark.conf.set(k, v)
-    return F.broadcast, restore
+    The confs are restored when the block exits (:func:`scoped_conf`),
+    so whatever the query plans after its loop -- e.g. betweenness's
+    closure joins, which want AQE's runtime broadcasts -- plans at the
+    session's own settings (measured: leaving the diet on for the whole
+    query cost more than the loop saved).  A loop result that still
+    carries an unplanned tail takes a lazy checkpoint inside the block."""
+    confs = ({"spark.sql.adaptive.enabled": "false",
+              "spark.sql.shuffle.partitions":
+                  str(max(1, width_df.rdd.getNumPartitions()))}
+             if small else {})
+    with scoped_conf(spark, confs):
+        yield F.broadcast if small else (lambda df: df)
 
 
 def _rank_loop(verts: DataFrame, edges_share: DataFrame,
@@ -533,53 +492,59 @@ def _rank_loop(verts: DataFrame, edges_share: DataFrame,
     # plausibly fits executor memory (~24B/row); past that it must
     # SHUFFLE onto the stationary src-partitioned edge table
     small_vector = n <= 10_000_000
-    _superstep_mode(verts.sparkSession, small_vector)
-
-    for i in range(max_iter):
-        rhs = F.broadcast(ranks) if small_vector else ranks
-        contribs = (edges_share.join(rhs, edges_share.src == ranks.id)
-                    .groupBy(F.col("dst").alias("id"))
-                    .agg(F.sum(F.col("rank") * F.col("share")).alias("contrib")))
-        if n_dangling:
-            # materialize the superstep aggregate once; its two
-            # consumers (the scalar and the vertex rows) then read
-            # cached partitions -- lineage stays linear with no
-            # per-step plan doubling, and nothing below funnels
-            # through a single partition
-            # lazy: the logical plan is truncated to an RDD scan at
-            # call time either way (no 2^k analyzer blowup); eager
-            # would add a SEPARATE job per superstep, while lazy lets
-            # the dm broadcast-collect job materialize (and cache)
-            # the aggregate in the same pass its first consumer runs
-            contribs = contribs.localCheckpoint(eager=False)
-            dm = (contribs.where(F.col("id").isNull())
-                  .agg(F.coalesce(F.max("contrib"), F.lit(0.0))
-                       .alias("__dm")))
-            contribs = (contribs.where(F.col("id").isNotNull())
-                        .crossJoin(F.broadcast(dm)))
-        else:
-            contribs = contribs.withColumn("__dm", F.lit(0.0))
-        if teleport is not None:
-            ranks = (contribs.join(F.broadcast(teleport), "id")
-                     .select("id",
-                             (F.lit(1.0 - damping) * F.col("tele")
-                              + F.lit(damping)
-                              * (F.col("contrib")
-                                 + F.col("__dm") * F.col("tele")))
-                             .alias("rank")))
-        else:
-            ranks = contribs.select(
-                "id",
-                (F.lit((1.0 - damping) / n)
-                 + F.lit(damping) * (F.col("contrib") + F.col("__dm") / n))
-                .alias("rank"))
-        # the dangling path already materializes once per superstep;
-        # the periodic checkpoint only serves the no-dangling path.
-        # The final iteration always checkpoints so the LAST loop
-        # segment is physically planned here in the builder.
-        if not n_dangling and ((i + 1) % checkpoint_every == 0
-                               or i == max_iter - 1):
-            ranks = ranks.localCheckpoint(eager=False)
+    # AQE's per-exchange re-plan is pure driver latency on supersteps
+    # whose join is an explicit broadcast (measured: loop alone 3.3s
+    # AQE-on -> 2.1s AQE-off); the shuffle width stays the session's
+    aqe_off = {"spark.sql.adaptive.enabled": "false"} if small_vector else {}
+    with scoped_conf(verts.sparkSession, aqe_off):
+        for i in range(max_iter):
+            rhs = F.broadcast(ranks) if small_vector else ranks
+            contribs = (edges_share.join(rhs, edges_share.src == ranks.id)
+                        .groupBy(F.col("dst").alias("id"))
+                        .agg(F.sum(F.col("rank") * F.col("share"))
+                             .alias("contrib")))
+            if n_dangling:
+                # materialize the superstep aggregate once; its two
+                # consumers (the scalar and the vertex rows) then read
+                # cached partitions -- lineage stays linear with no
+                # per-step plan doubling, and nothing below funnels
+                # through a single partition
+                # lazy: the logical plan is truncated to an RDD scan at
+                # call time either way (no 2^k analyzer blowup); eager
+                # would add a SEPARATE job per superstep, while lazy lets
+                # the dm broadcast-collect job materialize (and cache)
+                # the aggregate in the same pass its first consumer runs
+                contribs = contribs.localCheckpoint(eager=False)
+                dm = (contribs.where(F.col("id").isNull())
+                      .agg(F.coalesce(F.max("contrib"), F.lit(0.0))
+                           .alias("__dm")))
+                contribs = (contribs.where(F.col("id").isNotNull())
+                            .crossJoin(F.broadcast(dm)))
+            else:
+                contribs = contribs.withColumn("__dm", F.lit(0.0))
+            if teleport is not None:
+                ranks = (contribs.join(F.broadcast(teleport), "id")
+                         .select("id",
+                                 (F.lit(1.0 - damping) * F.col("tele")
+                                  + F.lit(damping)
+                                  * (F.col("contrib")
+                                     + F.col("__dm") * F.col("tele")))
+                                 .alias("rank")))
+            else:
+                ranks = contribs.select(
+                    "id",
+                    (F.lit((1.0 - damping) / n)
+                     + F.lit(damping)
+                     * (F.col("contrib") + F.col("__dm") / n))
+                    .alias("rank"))
+            # the dangling path already materializes once per superstep;
+            # the periodic checkpoint only serves the no-dangling path.
+            # The final iteration always checkpoints so the LAST loop
+            # segment is physically planned here in the builder, under
+            # the loop's confs.
+            if i == max_iter - 1 or (not n_dangling
+                                     and (i + 1) % checkpoint_every == 0):
+                ranks = ranks.localCheckpoint(eager=False)
     return ranks.withColumnRenamed("rank", out_name)
 
 
@@ -738,29 +703,27 @@ def connected_components(graph: Graph, max_iter: int = 50) -> DataFrame:
     ue = _tagged(rows, 1, F.col("src").alias("a"), F.col("dst").alias("b"))
     both = ue.union(ue.select(F.col("b").alias("a"), F.col("a").alias("b")))
     small = n_labels <= 10_000_000
-    _b, _restore = _small_loop_mode(ue.sparkSession, small, ue)
-
-    for _ in range(max_iter):
-        neigh = (both.join(_b(labels), both.a == labels.id)
-                 .groupBy(F.col("b").alias("id"))
-                 .agg(F.min("component").alias("nbr_min")))
-        relaxed = F.least(F.col("component"),
-                          F.coalesce(F.col("nbr_min"), F.col("component")))
-        # the fixpoint count rides the SAME job that materializes the
-        # superstep checkpoint (a __chg flag summed by a scan-sized
-        # agg) instead of a separate join-back against the previous
-        # labels -- one action per superstep, no second scan (the same
-        # fusion as Borůvka's pointer doubling)
-        new = (labels.join(_b(neigh), "id", "left")
-               .select("id", relaxed.alias("component"),
-                       (relaxed != F.col("component")).cast("int")
-                       .alias("__chg"))
-               .localCheckpoint(eager=False))
-        changed = new.agg(F.sum("__chg")).first()[0]
-        labels = new.select("id", "component")
-        if not changed:
-            break
-    _restore()
+    with _small_loop_mode(ue.sparkSession, small, ue) as _b:
+        for _ in range(max_iter):
+            neigh = (both.join(_b(labels), both.a == labels.id)
+                     .groupBy(F.col("b").alias("id"))
+                     .agg(F.min("component").alias("nbr_min")))
+            relaxed = F.least(F.col("component"),
+                              F.coalesce(F.col("nbr_min"), F.col("component")))
+            # the fixpoint count rides the SAME job that materializes the
+            # superstep checkpoint (a __chg flag summed by a scan-sized
+            # agg) instead of a separate join-back against the previous
+            # labels -- one action per superstep, no second scan (the same
+            # fusion as Borůvka's pointer doubling)
+            new = (labels.join(_b(neigh), "id", "left")
+                   .select("id", relaxed.alias("component"),
+                           (relaxed != F.col("component")).cast("int")
+                           .alias("__chg"))
+                   .localCheckpoint(eager=False))
+            changed = new.agg(F.sum("__chg")).first()[0]
+            labels = new.select("id", "component")
+            if not changed:
+                break
     return labels
 
 
@@ -876,37 +839,36 @@ def bfs_hops(graph: Graph, sources: list, max_hops: int = 20,
     # small-loop gate: frontier/visited bounded by the vertex count
     # here (single shared frontier) -- see _small_loop_mode
     small = graph.vertices.count() <= 10_000_000
-    _b, _restore = _small_loop_mode(edges.sparkSession, small, edges)
-    # one extra probe round past the budget: warn only if the live
-    # frontier would STILL discover vertices (ADVICE r4 -- the bare
-    # for/else false-positived when BFS completed at exactly max_hops)
-    for hop in range(1, max_hops + 2):
-        nxt = (edges.join(_b(frontier), edges.src == frontier.id)
-               .select(F.col("dst").alias("id"))
-               .distinct()
-               .join(_b(visited.select("id")), "id", "left_anti")
-               .withColumn("dist", F.lit(hop))
-               .localCheckpoint(eager=False))
-        if nxt.isEmpty():
-            _restore()
-            break
-        if hop > max_hops:
-            _warn_hop_budget("bfs_hops", max_hops)
-            _restore()
-            break
-        # LOOP-SHAPE INVARIANT (round 11, do not undo): no checkpoint
-        # on the union -- every leaf (the per-hop nxt) is already a
-        # materialized checkpoint, so the union is pure plan glue;
-        # re-checkpointing it copied the ENTIRE closure once per hop
-        # (O(hops^2) bytes at any scale).  The union DOES accrete one
-        # plan leg per hop, but that growth is linear and bounded by
-        # max_hops (~20-30), far below analyzer-pain territory.  The
-        # same invariant holds at every visited-union site below
-        # (_multi_root_bfs, _multi_root_bfs_paths, bridges).  See also
-        # _superstep_mode's docstring for the companion invariant: AQE
-        # must stay ON for these stats-less frontier joins.
-        visited = visited.union(nxt)
-        frontier = nxt
+    with _small_loop_mode(edges.sparkSession, small, edges) as _b:
+        # one extra probe round past the budget: warn only if the live
+        # frontier would STILL discover vertices (ADVICE r4 -- the bare
+        # for/else false-positived when BFS completed at exactly max_hops)
+        for hop in range(1, max_hops + 2):
+            nxt = (edges.join(_b(frontier), edges.src == frontier.id)
+                   .select(F.col("dst").alias("id"))
+                   .distinct()
+                   .join(_b(visited.select("id")), "id", "left_anti")
+                   .withColumn("dist", F.lit(hop))
+                   .localCheckpoint(eager=False))
+            if nxt.isEmpty():
+                break
+            if hop > max_hops:
+                _warn_hop_budget("bfs_hops", max_hops)
+                break
+            # LOOP-SHAPE INVARIANT (round 11, do not undo): no checkpoint
+            # on the union -- every leaf (the per-hop nxt) is already a
+            # materialized checkpoint, so the union is pure plan glue;
+            # re-checkpointing it copied the ENTIRE closure once per hop
+            # (O(hops^2) bytes at any scale).  The union DOES accrete one
+            # plan leg per hop, but that growth is linear and bounded by
+            # max_hops (~20-30), far below analyzer-pain territory.  The
+            # same invariant holds at every visited-union site below
+            # (_multi_root_bfs, _multi_root_bfs_paths, bridges).  See also
+            # _small_loop_mode's docstring for the companion invariant:
+            # AQE goes off only while these stats-less frontier joins
+            # carry explicit broadcasts.
+            visited = visited.union(nxt)
+            frontier = nxt
     return (graph.vertices.select("id")
             .join(visited, "id", "left")
             .select("id", "dist"))
@@ -936,28 +898,26 @@ def _multi_root_bfs(graph: Graph, sources: list | None = None,
 
     # small-loop gate: see _small_loop_mode / _multi_root_bfs_paths
     small = frontier.count() * graph.vertices.count() <= 10_000_000
-    _b, _restore = _small_loop_mode(edges.sparkSession, small, edges)
-    for hop in range(1, max_hops + 2):
-        nxt = (edges.join(_b(frontier), edges.src == frontier.id)
-               .select("root", F.col("dst").alias("id"))
-               .distinct()
-               .join(_b(visited.select("root", "id")), ["root", "id"],
-                     "left_anti")
-               .withColumn("dist", F.lit(hop))
-               .localCheckpoint(eager=False))
-        if nxt.isEmpty():
-            _restore()
-            break
-        if hop > max_hops:
-            _warn_hop_budget("_multi_root_bfs", max_hops)
-            _restore()
-            break
-        # no checkpoint on the union: every leaf (the per-hop nxt) is
-        # already a materialized checkpoint, so the union is pure plan
-        # glue -- re-checkpointing it copied the ENTIRE closure once
-        # per hop (O(hops^2) bytes at any scale)
-        visited = visited.union(nxt)
-        frontier = nxt
+    with _small_loop_mode(edges.sparkSession, small, edges) as _b:
+        for hop in range(1, max_hops + 2):
+            nxt = (edges.join(_b(frontier), edges.src == frontier.id)
+                   .select("root", F.col("dst").alias("id"))
+                   .distinct()
+                   .join(_b(visited.select("root", "id")), ["root", "id"],
+                         "left_anti")
+                   .withColumn("dist", F.lit(hop))
+                   .localCheckpoint(eager=False))
+            if nxt.isEmpty():
+                break
+            if hop > max_hops:
+                _warn_hop_budget("_multi_root_bfs", max_hops)
+                break
+            # no checkpoint on the union: every leaf (the per-hop nxt) is
+            # already a materialized checkpoint, so the union is pure plan
+            # glue -- re-checkpointing it copied the ENTIRE closure once
+            # per hop (O(hops^2) bytes at any scale)
+            visited = visited.union(nxt)
+            frontier = nxt
     return visited
 
 
@@ -1519,30 +1479,28 @@ def _multi_root_bfs_paths(graph: Graph, sources: list | None = None,
     # size (roots x vertices); below ~10M rows every loop join has a
     # broadcastable side and the diet applies (_small_loop_mode)
     small = frontier.count() * graph.vertices.count() <= 10_000_000
-    _b, _restore = _small_loop_mode(edges.sparkSession, small, edges)
-    for hop in range(1, max_hops + 2):
-        nxt = (edges.join(_b(frontier), edges.src == frontier.id)
-               .groupBy("root", F.col("dst").alias("nid"))
-               .agg(F.sum("npaths").alias("npaths"))
-               .withColumnRenamed("nid", "id")
-               .join(_b(visited.select("root", "id")), ["root", "id"],
-                     "left_anti")
-               .withColumn("dist", F.lit(hop))
-               .select("root", "id", "dist", "npaths")
-               .localCheckpoint(eager=False))
-        if nxt.isEmpty():
-            _restore()
-            break
-        if hop > max_hops:
-            _warn_hop_budget("_multi_root_bfs_paths", max_hops)
-            _restore()
-            break
-        # no checkpoint on the union: every leaf (the per-hop nxt) is
-        # already a materialized checkpoint, so the union is pure plan
-        # glue -- re-checkpointing it copied the ENTIRE closure once
-        # per hop (O(hops^2) bytes at any scale)
-        visited = visited.union(nxt)
-        frontier = nxt
+    with _small_loop_mode(edges.sparkSession, small, edges) as _b:
+        for hop in range(1, max_hops + 2):
+            nxt = (edges.join(_b(frontier), edges.src == frontier.id)
+                   .groupBy("root", F.col("dst").alias("nid"))
+                   .agg(F.sum("npaths").alias("npaths"))
+                   .withColumnRenamed("nid", "id")
+                   .join(_b(visited.select("root", "id")), ["root", "id"],
+                         "left_anti")
+                   .withColumn("dist", F.lit(hop))
+                   .select("root", "id", "dist", "npaths")
+                   .localCheckpoint(eager=False))
+            if nxt.isEmpty():
+                break
+            if hop > max_hops:
+                _warn_hop_budget("_multi_root_bfs_paths", max_hops)
+                break
+            # no checkpoint on the union: every leaf (the per-hop nxt) is
+            # already a materialized checkpoint, so the union is pure plan
+            # glue -- re-checkpointing it copied the ENTIRE closure once
+            # per hop (O(hops^2) bytes at any scale)
+            visited = visited.union(nxt)
+            frontier = nxt
     return visited
 
 
@@ -1757,121 +1715,104 @@ def boruvka_mst(vertices: DataFrame, uedges: DataFrame,
     # small-graph gate below (same fusion as _rank_loop's dangling)
     comp = vertices.select("id", F.col("id").alias("component")) \
         .localCheckpoint(eager=False)
+    # every join in the contraction loop has a vertex- or
+    # component-sized side (comp projections, the hooking/doubling
+    # parent maps, the relabel table): under 10M vertices the diet
+    # applies (_small_loop_mode).  AQE's per-exchange re-plans were the
+    # dominant cost of this loop (~4 AQE stage jobs per round plus
+    # planning gaps; see OPTIMIZATION_r12.md)
     small = comp.count() <= 10_000_000
-    spark = vertices.sparkSession
-    if small:
-        # every join in the contraction loop has a vertex- or
-        # component-sized side (comp projections, the hooking/doubling
-        # parent maps, the relabel table); when those fit executor
-        # memory, hint them broadcast EXPLICITLY so the static planner
-        # gets the right join without AQE's runtime conversion -- then
-        # AQE itself can go (via _superstep_mode / conf_flip, restored
-        # at the query boundary): its per-exchange materialize+re-plan
-        # round trips were the dominant cost of the loop (measured:
-        # ~4 AQE stage jobs per round plus planning gaps; see
-        # OPTIMIZATION_r12.md).  The r11 negative result ("AQE-off
-        # makes Boruvka worse") was measured WITHOUT these hints --
-        # stats-less checkpointed inputs then fall back to
-        # SortMergeJoin; with the hints the static plan is right.  At
-        # >10M vertices nothing is hinted and AQE stays on.
-        _superstep_mode(spark, True)
-        # with AQE off, the static shuffle width (= core count) would
-        # put every component-sized aggregate through that many
-        # near-empty reduce tasks; width follows the materialized edge
-        # table instead (scale-adaptive, restored at the query
-        # boundary by conf_flip).  Numerically exact at ANY width:
-        # the loop's only aggregates are integer/struct MINs.
-        from ..session import conf_flip
-        conf_flip(spark, "spark.sql.shuffle.partitions",
-                  str(edges.rdd.getNumPartitions()))
-    _b = F.broadcast if small else (lambda df: df)
     mst = None
-    for _ in range(max_rounds):
-        ca = _b(comp.select(F.col("id").alias("a"),
-                            F.col("component").alias("__ca")))
-        cb = _b(comp.select(F.col("id").alias("b"),
-                            F.col("component").alias("__cb")))
-        # driver-action diet (round 12, guide §1/§5: fewer jobs per
-        # round): the live table is consumed exactly once -- an
-        # EXPLODE emits both (c, e, p) directions in the same pass, so
-        # `live` no longer needs its own checkpoint (the old shape
-        # materialized live, then union'd two projections of it), and
-        # the round's termination test moves onto minpick (empty ==
-        # no live inter-component edge) -- two driver actions per
-        # round become zero.  Map-side partial aggregation collapses
-        # the exploded rows to component-sized output before the
-        # shuffle, so the explode does not widen the exchange.
-        live = (edges.join(ca, "a").join(cb, "b")
-                .where(F.col("__ca") != F.col("__cb")))
-        pick_struct = F.struct("w", "a", "b")
-        # per-component min outgoing edge, carrying the partner
-        # component: min by (edge, partner) == min by edge, since each
-        # (component, edge) pair has exactly one partner
-        cand = (live.select(F.explode(F.array(
-                    F.struct(F.col("__ca").alias("c"),
-                             pick_struct.alias("e"),
-                             F.col("__cb").alias("p")),
-                    F.struct(F.col("__cb").alias("c"),
-                             pick_struct.alias("e"),
-                             F.col("__ca").alias("p")))).alias("x"))
-                .select("x.c", "x.e", "x.p"))
-        minpick = (cand.groupBy("c")
-                   .agg(F.min(F.struct("e", "p")).alias("m"))
-                   .select("c", F.col("m.e.a").alias("a"),
-                           F.col("m.e.b").alias("b"),
-                           F.col("m.e.w").alias("w"),
-                           F.col("m.p").alias("p"))
-                   .localCheckpoint())
-        if minpick.isEmpty():
-            break
-        picked = minpick.select("a", "b", "w").distinct()
-        # no cross-round distinct/checkpoint: a picked edge's endpoints
-        # merge this round, so it can never be live (or re-picked)
-        # again -- mst is a union of <= max_rounds checkpointed pieces
-        mst = picked if mst is None else mst.union(picked)
-        # hooking: parent(c) = min-edge partner.  If c and p picked
-        # each other they necessarily picked the SAME edge (each
-        # other's edge is outgoing from both, so both minima coincide;
-        # weights are distinct) -- root that 2-cycle at min(c, p).
-        # Stays an EAGER checkpoint: an A/B of the lazy form (hooking
-        # folded into doubling iteration 1) measured WORSE -- the
-        # doubling join references parent twice, so laziness re-plans
-        # and re-runs the hooking join's AQE exchanges once per
-        # reference, costing more than the one checkpoint job saved.
-        pr = minpick.select("c", "p")
-        pmap = _b(pr.select(F.col("c").alias("__pc"),
-                            F.col("p").alias("__pp")))
-        parent = (pr.join(pmap, pr.p == pmap.__pc)
-                  .select("c", F.when((F.col("__pp") == F.col("c"))
-                                      & (F.col("c") < F.col("p")),
-                                      F.col("c"))
-                          .otherwise(F.col("p")).alias("p"))
-                  .localCheckpoint())
-        # pointer doubling: parent <- parent(parent) until fixpoint.
-        # The changed-count rides the SAME job that materializes the
-        # jumped checkpoint (a __chg flag summed by a scan-sized agg)
-        # instead of a separate join-back against the previous parent
-        # -- one action per doubling step, no second scan.
-        while True:
-            pj = _b(parent.select(F.col("c").alias("__jc"),
-                                  F.col("p").alias("__jp")))
-            jumped = (parent.join(pj, parent.p == pj.__jc, "left")
-                      .select("c",
-                              F.coalesce("__jp", "p").alias("p"),
-                              (F.coalesce("__jp", "p") != F.col("p"))
-                              .cast("int").alias("__chg"))
-                      .localCheckpoint(eager=False))
-            changed = jumped.agg(F.sum("__chg")).first()[0]
-            parent = jumped.select("c", "p")
-            if not changed:
+    with _small_loop_mode(vertices.sparkSession, small, edges) as _b:
+        for _ in range(max_rounds):
+            ca = _b(comp.select(F.col("id").alias("a"),
+                                F.col("component").alias("__ca")))
+            cb = _b(comp.select(F.col("id").alias("b"),
+                                F.col("component").alias("__cb")))
+            # driver-action diet (round 12, guide §1/§5: fewer jobs per
+            # round): the live table is consumed exactly once -- an
+            # EXPLODE emits both (c, e, p) directions in the same pass, so
+            # `live` no longer needs its own checkpoint (the old shape
+            # materialized live, then union'd two projections of it), and
+            # the round's termination test moves onto minpick (empty ==
+            # no live inter-component edge) -- two driver actions per
+            # round become zero.  Map-side partial aggregation collapses
+            # the exploded rows to component-sized output before the
+            # shuffle, so the explode does not widen the exchange.
+            live = (edges.join(ca, "a").join(cb, "b")
+                    .where(F.col("__ca") != F.col("__cb")))
+            pick_struct = F.struct("w", "a", "b")
+            # per-component min outgoing edge, carrying the partner
+            # component: min by (edge, partner) == min by edge, since each
+            # (component, edge) pair has exactly one partner
+            cand = (live.select(F.explode(F.array(
+                        F.struct(F.col("__ca").alias("c"),
+                                 pick_struct.alias("e"),
+                                 F.col("__cb").alias("p")),
+                        F.struct(F.col("__cb").alias("c"),
+                                 pick_struct.alias("e"),
+                                 F.col("__ca").alias("p")))).alias("x"))
+                    .select("x.c", "x.e", "x.p"))
+            minpick = (cand.groupBy("c")
+                       .agg(F.min(F.struct("e", "p")).alias("m"))
+                       .select("c", F.col("m.e.a").alias("a"),
+                               F.col("m.e.b").alias("b"),
+                               F.col("m.e.w").alias("w"),
+                               F.col("m.p").alias("p"))
+                       .localCheckpoint())
+            if minpick.isEmpty():
                 break
-        relab = _b(parent.select(F.col("c").alias("component"),
-                                 F.col("p").alias("__new")))
-        # left join: components with no live edge keep their label
-        comp = (comp.join(relab, "component", "left")
-                .select("id", F.coalesce("__new", "component")
-                        .alias("component"))
-                .localCheckpoint())
+            picked = minpick.select("a", "b", "w").distinct()
+            # no cross-round distinct/checkpoint: a picked edge's endpoints
+            # merge this round, so it can never be live (or re-picked)
+            # again -- mst is a union of <= max_rounds checkpointed pieces
+            mst = picked if mst is None else mst.union(picked)
+            # hooking: parent(c) = min-edge partner.  If c and p picked
+            # each other they necessarily picked the SAME edge (each
+            # other's edge is outgoing from both, so both minima coincide;
+            # weights are distinct) -- root that 2-cycle at min(c, p).
+            # Stays an EAGER checkpoint: an A/B of the lazy form (hooking
+            # folded into doubling iteration 1) measured WORSE -- the
+            # doubling join references parent twice, so laziness re-plans
+            # and re-runs the hooking join's AQE exchanges once per
+            # reference, costing more than the one checkpoint job saved.
+            pr = minpick.select("c", "p")
+            pmap = _b(pr.select(F.col("c").alias("__pc"),
+                                F.col("p").alias("__pp")))
+            parent = (pr.join(pmap, pr.p == pmap.__pc)
+                      .select("c", F.when((F.col("__pp") == F.col("c"))
+                                          & (F.col("c") < F.col("p")),
+                                          F.col("c"))
+                              .otherwise(F.col("p")).alias("p"))
+                      .localCheckpoint())
+            # pointer doubling: parent <- parent(parent) until fixpoint.
+            # The changed-count rides the SAME job that materializes the
+            # jumped checkpoint (a __chg flag summed by a scan-sized agg)
+            # instead of a separate join-back against the previous parent
+            # -- one action per doubling step, no second scan.
+            while True:
+                pj = _b(parent.select(F.col("c").alias("__jc"),
+                                      F.col("p").alias("__jp")))
+                jumped = (parent.join(pj, parent.p == pj.__jc, "left")
+                          .select("c",
+                                  F.coalesce("__jp", "p").alias("p"),
+                                  (F.coalesce("__jp", "p") != F.col("p"))
+                                  .cast("int").alias("__chg"))
+                          .localCheckpoint(eager=False))
+                changed = jumped.agg(F.sum("__chg")).first()[0]
+                parent = jumped.select("c", "p")
+                if not changed:
+                    break
+            relab = _b(parent.select(F.col("c").alias("component"),
+                                     F.col("p").alias("__new")))
+            # left join: components with no live edge keep their label
+            comp = (comp.join(relab, "component", "left")
+                    .select("id", F.coalesce("__new", "component")
+                            .alias("component"))
+                    .localCheckpoint())
+        if mst is not None:
+            # plan the union of distinct() pieces under the loop's confs
+            mst = mst.localCheckpoint(eager=False)
     if mst is None:
         return uedges.select("a", "b", "w").limit(0)
     return mst
@@ -2267,32 +2208,30 @@ def bridges(graph: Graph, max_hops: int = 30) -> DataFrame:
     # small-loop gate: per-excluded-edge BFS state is bounded by
     # |E| x |V| -- see _small_loop_mode
     small = ue.count() * graph.vertices.count() <= 10_000_000
-    _b, _restore = _small_loop_mode(sym.sparkSession, small, sym)
-    for hop in range(1, max_hops + 2):
-        nxt = (_b(frontier).join(sym, frontier.id == sym.a)
-               # drop the excluded edge in both directions
-               .where(~((F.col("id") == F.col("ea"))
-                        & (F.col("b") == F.col("eb")))
-                      & ~((F.col("id") == F.col("eb"))
-                          & (F.col("b") == F.col("ea"))))
-               .select("ea", "eb", F.col("b").alias("id"))
-               .distinct()
-               .join(_b(visited), ["ea", "eb", "id"], "left_anti")
-               .localCheckpoint(eager=False))
-        if nxt.isEmpty():
-            _restore()
-            break
-        if hop > max_hops:
-            # truncation here would mark far-apart endpoints as bridges
-            _warn_hop_budget("bridges", max_hops)
-            _restore()
-            break
-        # no checkpoint on the union: every leaf (the per-hop nxt) is
-        # already a materialized checkpoint, so the union is pure plan
-        # glue -- re-checkpointing it copied the ENTIRE closure once
-        # per hop (O(hops^2) bytes at any scale)
-        visited = visited.union(nxt)
-        frontier = nxt
+    with _small_loop_mode(sym.sparkSession, small, sym) as _b:
+        for hop in range(1, max_hops + 2):
+            nxt = (_b(frontier).join(sym, frontier.id == sym.a)
+                   # drop the excluded edge in both directions
+                   .where(~((F.col("id") == F.col("ea"))
+                            & (F.col("b") == F.col("eb")))
+                          & ~((F.col("id") == F.col("eb"))
+                              & (F.col("b") == F.col("ea"))))
+                   .select("ea", "eb", F.col("b").alias("id"))
+                   .distinct()
+                   .join(_b(visited), ["ea", "eb", "id"], "left_anti")
+                   .localCheckpoint(eager=False))
+            if nxt.isEmpty():
+                break
+            if hop > max_hops:
+                # truncation here would mark far-apart endpoints as bridges
+                _warn_hop_budget("bridges", max_hops)
+                break
+            # no checkpoint on the union: every leaf (the per-hop nxt) is
+            # already a materialized checkpoint, so the union is pure plan
+            # glue -- re-checkpointing it copied the ENTIRE closure once
+            # per hop (O(hops^2) bytes at any scale)
+            visited = visited.union(nxt)
+            frontier = nxt
     reached = (visited.where(F.col("id") == F.col("eb"))
                .select("ea", "eb", F.lit(True).alias("__r")))
     return (ue.join(reached, (ue.a == reached.ea) & (ue.b == reached.eb),
@@ -2501,20 +2440,19 @@ def temporal_reachability_cooccurrence(memberships: DataFrame,
     # user), so mem's row count upper-bounds every per-round state
     mem = mem.localCheckpoint(eager=False)
     small = mem.count() <= 10_000_000
-    _b, _restore = _small_loop_mode(mem.sparkSession, small, mem)
     arr = arrivals
-    for _ in range(rounds):
-        act = (mem.join(_b(arr.withColumnRenamed("arr", "__arr")),
-                        id_col)
-               .where(F.col("t") >= F.col("__arr"))
-               .select("t").distinct())
-        relay = (mem.join(_b(act), "t")
-                 .groupBy(id_col).agg(F.min("t").alias("__new")))
-        arr = (arr.join(_b(relay), id_col, "left")
-               .select(id_col,
-                       F.least(F.col("arr"),
-                               F.coalesce(F.col("__new"), F.col("arr")))
-                       .alias("arr"))
-               .localCheckpoint(eager=False))
-    _restore()
+    with _small_loop_mode(mem.sparkSession, small, mem) as _b:
+        for _ in range(rounds):
+            act = (mem.join(_b(arr.withColumnRenamed("arr", "__arr")),
+                            id_col)
+                   .where(F.col("t") >= F.col("__arr"))
+                   .select("t").distinct())
+            relay = (mem.join(_b(act), "t")
+                     .groupBy(id_col).agg(F.min("t").alias("__new")))
+            arr = (arr.join(_b(relay), id_col, "left")
+                   .select(id_col,
+                           F.least(F.col("arr"),
+                                   F.coalesce(F.col("__new"), F.col("arr")))
+                           .alias("arr"))
+                   .localCheckpoint(eager=False))
     return arr

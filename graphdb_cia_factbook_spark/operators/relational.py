@@ -126,28 +126,6 @@ def rank_in_group(df: DataFrame, partition: Sequence[str],
     return df.withColumn(alias, F.rank().over(w))
 
 
-def top_k_per_group(df: DataFrame, partition: Sequence[str],
-                    order_by: Sequence[Column], k: int) -> DataFrame:
-    """W1+O3: top-k per group (the README's "top partner per country").
-    ``row_number`` (not rank) so exactly k rows survive; order must be
-    total for determinism."""
-    w = Window.partitionBy(*partition).orderBy(*order_by)
-    return (df.withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") <= k).drop("__rn"))
-
-
-def positional_rank(df: DataFrame, array_col: str, out_item: str,
-                    out_pos: str, one_based: bool = True) -> DataFrame:
-    """W2: rank = position in a scraped list (scrape_cia.py:172, 214)
-    via ``posexplode`` -- keeps the original array order as an explicit
-    column instead of relying on row order."""
-    shift = 1 if one_based else 0
-    return (df.select("*", F.posexplode(F.col(array_col))
-                      .alias(out_pos, out_item))
-            .withColumn(out_pos, F.col(out_pos) + shift)
-            .drop(array_col))
-
-
 # ---------------------------------------------------------------------------
 # J: join family
 # ---------------------------------------------------------------------------
@@ -160,37 +138,6 @@ def left_broadcast_join(df: DataFrame, dim: DataFrame,
     removes the shuffle of the fact side entirely -- at 100 TB that is
     the only viable plan for dim joins."""
     return df.join(F.broadcast(dim), on, how)
-
-
-def chained_indicator_join(base: DataFrame, indicators: Mapping[str, DataFrame],
-                           key: str, value_col: str, year_col: str,
-                           order_by: Sequence[Column]) -> DataFrame:
-    """J2: the reference's loop joining 5 economic indicators onto the
-    country dim after latest-year dedup, renaming to ``amount_<name>`` /
-    ``year_<name>`` (preprocess_upload_neo4j.py:128-144)."""
-    out = base
-    for name, ind in indicators.items():
-        latest = latest_per_key(ind, [key], order_by)
-        dim = latest.select(
-            key,
-            F.col(value_col).alias(f"amount_{name}"),
-            F.col(year_col).alias(f"year_{name}"),
-        )
-        out = left_broadcast_join(out, dim, key)
-    return out
-
-
-def validate_edges(edges: DataFrame, vertices: DataFrame,
-                   src: str = "src", dst: str = "dst",
-                   vid: str = "id") -> DataFrame:
-    """J7: graph-pattern endpoint validation -- Cypher's
-    ``MATCH (n),(m) MERGE (n)-[e]->(m)`` drops edges whose endpoints
-    don't exist (preprocess_upload_neo4j.py:291-293).  Two broadcast
-    semi-joins; no edge-table shuffle."""
-    ids = vertices.select(F.col(vid))
-    return (edges
-            .join(F.broadcast(ids.withColumnRenamed(vid, src)), src, "left_semi")
-            .join(F.broadcast(ids.withColumnRenamed(vid, dst)), dst, "left_semi"))
 
 
 # ---------------------------------------------------------------------------
@@ -426,21 +373,21 @@ def ancestor_closure(parents: DataFrame, node_col: str = "node",
     # to the AQE shape mid-loop.
     from .graph import _small_loop_mode
     for _ in range(max_rounds):
-        _b, _restore = _small_loop_mode(clo.sparkSession,
-                                        n_prev <= 10_000_000, clo)
-        a, b = clo.alias("a"), _b(clo.alias("b"))
-        nxt = (a.join(b, F.col("a.anc") == F.col("b.node"))
-               .select(F.col("a.node").alias("node"),
-                       F.col("b.anc").alias("anc"),
-                       (F.col("a.dist") + F.col("b.dist")).alias("dist")))
-        # lazy checkpoint + count: the fixpoint count materializes the
-        # round's checkpoint in the SAME job (eager paid two)
-        merged = (clo.union(nxt)
-                  .groupBy("node", "anc")
-                  .agg(F.min("dist").alias("dist"))
-                  .localCheckpoint(eager=False))
-        n_merged = merged.count()
-        _restore()
+        with _small_loop_mode(clo.sparkSession, n_prev <= 10_000_000,
+                              clo) as _b:
+            a, b = clo.alias("a"), _b(clo.alias("b"))
+            nxt = (a.join(b, F.col("a.anc") == F.col("b.node"))
+                   .select(F.col("a.node").alias("node"),
+                           F.col("b.anc").alias("anc"),
+                           (F.col("a.dist") + F.col("b.dist"))
+                           .alias("dist")))
+            # lazy checkpoint + count: the fixpoint count materializes
+            # the round's checkpoint in the SAME job (eager paid two)
+            merged = (clo.union(nxt)
+                      .groupBy("node", "anc")
+                      .agg(F.min("dist").alias("dist"))
+                      .localCheckpoint(eager=False))
+            n_merged = merged.count()
         if n_merged == n_prev:
             return merged
         clo, n_prev = merged, n_merged

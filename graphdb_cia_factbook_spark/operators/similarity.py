@@ -52,38 +52,6 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / F.sqrt(norm_sq(a) * norm_sq(b))
 
 
-def dot_unrolled(a: Column, b: Column, dim: int) -> Column:
-    """``dot`` for a statically-known dimension, unrolled to a literal
-    ``+``/``*`` chain.
-
-    Array lambdas (``zip_with``/``aggregate``) evaluate INTERPRETED --
-    the round-7 ``llm_random_projection`` lesson, re-learned here when
-    ``llm_bitext_mining``'s 2.3B-pair scoring stalled the sf10 sweep:
-    the fold is ~40x slower than whole-stage codegen.  The unrolled
-    chain seeds the same ``0.0`` and keeps the same left association
-    as :func:`fold_sum` (``((0.0 + t1) + t2) + ...``), so every
-    intermediate IEEE double is bit-identical to the fold's -- swap is
-    hash-invariant by construction, verified by the oracle sweeps."""
-    t = F.lit(0.0)
-    for i in range(1, dim + 1):
-        t = t + (F.element_at(a, i).cast("double")
-                 * F.element_at(b, i).cast("double"))
-    return t
-
-
-def norm_sq_unrolled(a: Column, dim: int) -> Column:
-    """``norm_sq`` unrolled for a statically-known dimension (see
-    :func:`dot_unrolled`)."""
-    return dot_unrolled(a, a, dim)
-
-
-def cosine_unrolled(a: Column, b: Column, dim: int) -> Column:
-    """``cosine`` unrolled for a statically-known dimension (see
-    :func:`dot_unrolled`): bit-identical values, codegen speed."""
-    return dot_unrolled(a, b, dim) / F.sqrt(
-        norm_sq_unrolled(a, dim) * norm_sq_unrolled(b, dim))
-
-
 def sign_signature(vec: Column, nbits: int = 8) -> Column:
     """Bit-sampling LSH for cosine: '0'/'1' string of the signs of the
     first ``nbits`` dimensions.  Deterministic (no random hyperplanes),

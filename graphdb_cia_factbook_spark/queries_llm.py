@@ -159,8 +159,7 @@ def _dot_sql_unrolled(a: str, b: str, dim: int = _EMBED_DIM) -> str:
     seed (``((t1 + t2) + t3) + ...``) and SQL ``+`` is left-
     associative, so the chain's every intermediate IEEE double is
     bit-identical to the fold's -- but it runs vectorized instead of
-    through per-row lambda interpretation (~40x on 2.3B pairs; the
-    engine-side twin is ``similarity.dot_unrolled``)."""
+    through per-row lambda interpretation (~40x on 2.3B pairs)."""
     return "(" + " + ".join(
         f"CAST({a}[{i}] AS DOUBLE) * CAST({b}[{i}] AS DOUBLE)"
         for i in range(1, dim + 1)) + ")"

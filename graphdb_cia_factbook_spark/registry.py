@@ -42,13 +42,10 @@ def _prepare_session(spark: SparkSession) -> None:
       the usual starting point that AQE re-plans per stage.
     """
     try:
-        import os
-
-        from .session import clear_scratch
+        from .session import clear_scratch, local_cpus
         clear_scratch(spark)
         spark.conf.set("spark.sql.codegen.hugeMethodLimit", "8000")
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
-        spark.conf.set("spark.sql.shuffle.partitions", str(cpus))
+        spark.conf.set("spark.sql.shuffle.partitions", str(local_cpus()))
     except Exception:  # noqa: BLE001 -- hygiene must never fail a query
         pass
 

@@ -12,13 +12,47 @@ nevertheless the one we would ship to a 1000-executor cluster reading
   transfers columnar batches, not pickled rows.
 - Session timezone pinned to UTC so timestamp semantics match the DuckDB
   oracle (and any other engine) bit-for-bit.
+
+Operators never change a session conf for good: a loop that needs
+different physical settings runs inside :func:`scoped_conf`, which puts
+the caller's values back when the loop exits, by return or by raise.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator, Mapping
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
+
+
+def local_cpus() -> int:
+    """Cores of the local master: ``SPARK_GRAFT_CPUS``, else the host's
+    core count."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession,
+                confs: Mapping[str, str]) -> Iterator[None]:
+    """Set session ``confs`` for the body of a ``with`` block and put
+    the values read on entry back on exit, including when the body
+    raises.  Nested scopes unwind in order, so the outermost scope
+    restores what the caller had.
+
+    Spark plans a DataFrame when an action or a checkpoint runs, not
+    when it is built, so a loop that wants its settings applied to a
+    lazy result must checkpoint that result (``eager=False`` costs no
+    job) before the scope closes."""
+    prior = {key: spark.conf.get(key) for key in confs}
+    for key, value in confs.items():
+        spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        for key, value in prior.items():
+            spark.conf.set(key, value)
 
 
 def _default_driver_memory() -> str:
@@ -32,7 +66,7 @@ def _default_driver_memory() -> str:
 
 def get_spark(app_name: str = "graphdb_cia_factbook_spark",
               shuffle_partitions: int | None = None) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+    cpus = local_cpus()
     shuffle = shuffle_partitions or int(
         os.environ.get("SPARK_SHUFFLE_PARTITIONS", cpus))
     builder = (
@@ -97,27 +131,6 @@ def track_scratch_dir(path: str) -> str:
     return path
 
 
-#: Session confs flipped by an operator for the duration of ONE query
-#: (graph._superstep_mode turns AQE off for small superstep loops),
-#: mapped to the PRIOR value to restore at the next query boundary.
-#: clear_scratch restores the recorded value -- not a hardcoded
-#: default -- so a harness session deliberately configured with AQE
-#: off stays that way (round-11 ADVICE items 1-2).
-_CONF_RESTORE: dict[str, str] = {}
-
-
-def conf_flip(spark: SparkSession, key: str, value: str) -> None:
-    """Set a session conf for the CURRENT query only: records the
-    prior value (first flip wins) for :func:`clear_scratch` to restore
-    at the query boundary."""
-    if key not in _CONF_RESTORE:
-        try:
-            _CONF_RESTORE[key] = spark.conf.get(key)
-        except Exception:  # noqa: BLE001 -- unknown key: nothing to restore
-            _CONF_RESTORE[key] = None
-    spark.conf.set(key, value)
-
-
 def clear_scratch(spark: SparkSession) -> int:
     """Drop all persisted/checkpointed RDD blocks and cached plans.
 
@@ -127,29 +140,14 @@ def clear_scratch(spark: SparkSession) -> int:
     their own query but are dead weight afterwards.  Leaving them in
     the block manager measurably degrades every LATER job in the
     session (observed 3-5x on the bench); run this between logically
-    independent queries.  Returns the number of RDDs dropped.
+    independent queries.  Returns the number of RDDs dropped.  Session
+    confs are not its business: every loop restores its own on exit
+    (:func:`scoped_conf`).
 
     CAUTION: call only when no live DataFrame still reads a
     localCheckpoint -- checkpointed blocks are non-recomputable, so
     clearing under a live consumer fails its next action."""
     import gc
-
-    # restore operator-flipped confs to their RECORDED prior values:
-    # small iterative operators turn AQE off for their own action
-    # (graph._superstep_mode via conf_flip -- AQE re-plans every
-    # superstep exchange, pure driver latency on tiny supersteps); the
-    # flip is session-level, so the query boundary puts back whatever
-    # the session had before -- not a hardcoded "true", which would
-    # override a harness session deliberately built with AQE off
-    while _CONF_RESTORE:
-        key, val = _CONF_RESTORE.popitem()
-        try:
-            if val is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, val)
-        except Exception:
-            pass
 
     jrdds = spark.sparkContext._jsc.getPersistentRDDs()
     ids = list(jrdds.keySet().toArray())

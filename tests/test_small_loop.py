@@ -1,19 +1,30 @@
-"""Round-12 optimization internals: conf_flip/restore hygiene, the
+"""Round-12 optimization internals: scoped session confs, the
 _small_loop_mode diet scoping, and the compute-gated MinHash widen.
 
-These pin the three behaviors the round-12 optimizations rely on, so
-a later edit cannot silently (a) leave a session's AQE flipped, (b)
-leak the loop diet's shuffle width into the rest of a query, or (c)
-re-introduce the unconditional widen shuffle on the cheap operating
-point (the round-11 llm_minhash_lsh 0.84x regression)."""
+These pin the behaviors the round-12 optimizations rely on, so a later
+edit cannot silently (a) leave a session's AQE or shuffle width
+changed after a loop -- on return or on an exception -- or write a
+conf outside the one scoped mechanism, (b) leak the loop diet's
+shuffle width into the rest of a query, or (c) re-introduce the
+unconditional widen shuffle on the cheap operating point (the
+round-11 llm_minhash_lsh 0.84x regression)."""
 
 from __future__ import annotations
+
+import ast
+import re
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
-from graphdb_cia_factbook_spark.session import (clear_scratch, conf_flip,
-                                                get_spark)
+from graphdb_cia_factbook_spark.session import (clear_scratch, get_spark,
+                                                scoped_conf)
+
+AQE = "spark.sql.adaptive.enabled"
+WIDTH = "spark.sql.shuffle.partitions"
+SF = "/root/testdata/sf0.001"
+ENGINE = Path(__file__).resolve().parents[1] / "graphdb_cia_factbook_spark"
 
 
 @pytest.fixture(scope="module")
@@ -21,60 +32,121 @@ def spark():
     return get_spark("test-small-loop")
 
 
-def test_conf_flip_restores_prior_value_not_default(spark):
-    """clear_scratch must put back the RECORDED prior value -- a
-    session deliberately running with AQE off stays off (round-11
-    ADVICE items 1-2)."""
-    key = "spark.sql.adaptive.enabled"
-    clear_scratch(spark)  # drain any leftover flips first
-    spark.conf.set(key, "false")  # harness chose AQE off
+def _confs(spark) -> dict[str, str]:
+    return {k: spark.conf.get(k) for k in (AQE, WIDTH)}
+
+
+def test_scoped_conf_restores_prior_value_not_default(spark):
+    """The scope puts back the value it found -- a session deliberately
+    running with AQE off stays off (round-11 ADVICE items 1-2)."""
+    spark.conf.set(AQE, "false")  # harness chose AQE off
     try:
-        conf_flip(spark, key, "true")
-        assert spark.conf.get(key) == "true"
-        clear_scratch(spark)
-        assert spark.conf.get(key) == "false"  # NOT hardcoded "true"
+        with scoped_conf(spark, {AQE: "true"}):
+            assert spark.conf.get(AQE) == "true"
+        assert spark.conf.get(AQE) == "false"  # NOT hardcoded "true"
     finally:
-        spark.conf.set(key, "true")
+        spark.conf.set(AQE, "true")
 
 
-def test_conf_flip_first_flip_wins(spark):
-    """Two flips of the same key in one query restore to the ORIGINAL
-    value, not the intermediate one."""
-    key = "spark.sql.shuffle.partitions"
-    clear_scratch(spark)
-    original = spark.conf.get(key)
-    conf_flip(spark, key, "7")
-    conf_flip(spark, key, "3")
-    assert spark.conf.get(key) == "3"
-    clear_scratch(spark)
-    assert spark.conf.get(key) == original
+def test_scoped_conf_nested_restores_outermost(spark):
+    """Nested scopes over the same key unwind to the ORIGINAL value,
+    not the intermediate one."""
+    original = spark.conf.get(WIDTH)
+    with scoped_conf(spark, {WIDTH: "7"}):
+        with scoped_conf(spark, {WIDTH: "3"}):
+            assert spark.conf.get(WIDTH) == "3"
+        assert spark.conf.get(WIDTH) == "7"
+    assert spark.conf.get(WIDTH) == original
 
 
 def test_small_loop_mode_scoped_restore(spark):
-    """_small_loop_mode's restore() puts AQE and the shuffle width
-    back immediately (loop scoping), and the small=False path is a
-    no-op passthrough."""
+    """The diet holds inside the block and AQE and the shuffle width
+    come back when it exits (loop scoping); the small=False path
+    passes frames through and changes no conf."""
     from graphdb_cia_factbook_spark.operators.graph import _small_loop_mode
 
-    clear_scratch(spark)
-    aqe0 = spark.conf.get("spark.sql.adaptive.enabled")
-    width0 = spark.conf.get("spark.sql.shuffle.partitions")
+    before = _confs(spark)
     stationary = spark.range(10).localCheckpoint()
 
-    hint, restore = _small_loop_mode(spark, True, stationary)
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
-    assert (spark.conf.get("spark.sql.shuffle.partitions")
-            == str(stationary.rdd.getNumPartitions()))
-    restore()
-    assert spark.conf.get("spark.sql.adaptive.enabled") == aqe0
-    assert spark.conf.get("spark.sql.shuffle.partitions") == width0
+    with _small_loop_mode(spark, True, stationary) as hint:
+        assert hint is F.broadcast
+        assert _confs(spark) == {
+            AQE: "false", WIDTH: str(stationary.rdd.getNumPartitions())}
+    assert _confs(spark) == before
 
     df = spark.range(3)
-    passthrough, noop_restore = _small_loop_mode(spark, False, stationary)
-    assert passthrough(df) is df
-    noop_restore()
-    assert spark.conf.get("spark.sql.adaptive.enabled") == aqe0
+    with _small_loop_mode(spark, False, stationary) as passthrough:
+        assert passthrough(df) is df
+        assert _confs(spark) == before
+    assert _confs(spark) == before
     clear_scratch(spark)
+
+
+def test_registry_mst_build_leaves_session_confs(spark):
+    """Building g_mst (Borůvka under the diet) hands the caller back
+    the confs the registry's entry hygiene set."""
+    from graphdb_cia_factbook_spark import registry
+    from graphdb_cia_factbook_spark.registry import _prepare_session
+
+    build = registry.queries()["g_mst"]
+    _prepare_session(spark)
+    expected = _confs(spark)
+    df = build(spark, SF)
+    assert _confs(spark) == expected
+    assert df.count() > 0
+    clear_scratch(spark)
+
+
+def test_loop_exception_restores_confs(spark, monkeypatch):
+    """An exception inside a scoped loop still restores the confs."""
+    from graphdb_cia_factbook_spark.operators import graph as gmod
+
+    def out_of_budget(fn_name, max_hops):
+        raise RuntimeError(f"{fn_name}: budget {max_hops}")
+
+    monkeypatch.setattr(gmod, "_warn_hop_budget", out_of_budget)
+    v = spark.createDataFrame([(i,) for i in range(4)], "id bigint")
+    e = spark.createDataFrame([(0, 1), (1, 2), (2, 3)],
+                              "src bigint, dst bigint")
+    before = _confs(spark)
+    assert before[AQE] == "true"  # the diet has something to restore
+    with pytest.raises(RuntimeError, match="bfs_hops: budget 1"):
+        gmod.bfs_hops(gmod.Graph(v, e), [0], max_hops=1)
+    assert _confs(spark) == before
+    clear_scratch(spark)
+
+
+def test_boruvka_on_edge_free_graph_returns_empty_forest(spark):
+    """An edge-free graph checkpoints to a 0-partition edge table; the
+    diet's shuffle width must still be >= 1."""
+    from graphdb_cia_factbook_spark.operators.graph import boruvka_mst
+
+    v = spark.createDataFrame([(1,), (2,)], "id bigint")
+    ue = spark.createDataFrame([(1, 2, 1)], "a bigint, b bigint, w int")
+    ue = ue.limit(0)  # planned as an empty scan with no partitions
+    assert boruvka_mst(v, ue).collect() == []
+    clear_scratch(spark)
+
+
+def test_conf_writes_only_in_scoped_conf_and_entry_hygiene():
+    """One mechanism for session confs: the engine writes a conf only
+    in ``session.scoped_conf`` (restored on exit) and in
+    ``registry._prepare_session`` (per-entry hygiene)."""
+    writes = re.compile(r"conf\.(un)?set\(")
+    found = set()
+    for path in sorted(ENGINE.rglob("*.py")):
+        src = path.read_text()
+        funcs = [n for n in ast.walk(ast.parse(src))
+                 if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))]
+        for lineno, line in enumerate(src.splitlines(), 1):
+            if writes.search(line):
+                owner = min((f for f in funcs
+                             if f.lineno <= lineno <= f.end_lineno),
+                            key=lambda f: f.end_lineno - f.lineno,
+                            default=None)
+                found.add((path.stem, owner.name if owner else "<module>"))
+    assert found == {("session", "scoped_conf"),
+                     ("registry", "_prepare_session")}
 
 
 def _minhash_plan(spark, num_hashes: int, bands: int) -> str:
