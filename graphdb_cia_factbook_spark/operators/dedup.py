@@ -35,27 +35,6 @@ def _hold(df: DataFrame) -> DataFrame:
     return df.localCheckpoint()
 
 
-def _widen(df: DataFrame) -> DataFrame:
-    """Re-spread a materialized-but-narrow intermediate across the
-    cluster before a compute-heavy map stage.
-
-    AQE coalesces shuffle output by BYTES, so a small shingle table
-    lands in very few partitions (measured: 4 of 32 at bench scale) --
-    the right call for shuffle cost, but it then starves per-row-
-    expensive consumers (the 32x-md5 MinHash signature aggregate ran
-    on 4 of 32 cores, 2.1s -> 0.6s after widening).  Round-robin
-    repartition to cluster width, ONLY when the input is narrower than
-    the cluster: a 100-TB shingle table is already wider than the
-    cluster and skips this path entirely (same contract as
-    ``sources.read_parallel``; the REPARTITION_BY_NUM exchange is
-    excluded from the plan-budget data-shuffle count for exactly this
-    reason)."""
-    width = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < width:
-        return df.repartition(width)
-    return df
-
-
 def exact_dedup(df: DataFrame, id_col: str = "doc_id",
                 text_col: str = "text") -> DataFrame:
     """Exact dedup: group by md5(normalized text); canonical doc is the
@@ -68,12 +47,19 @@ def exact_dedup(df: DataFrame, id_col: str = "doc_id",
                  F.count(F.lit(1)).alias("n_dups")))
 
 
+def _shingle_rows(df: DataFrame, id_col: str, text_col: str,
+                  k: int = 3) -> DataFrame:
+    """Word-k-shingles per doc as (id, shingle) rows, one per position
+    (a shingle repeated in a doc repeats here).  A narrow map of the
+    scan: no shuffle, so the rows keep the scan's partitioning."""
+    return df.select(F.col(id_col),
+                     F.explode(shingles(F.col(text_col), k)).alias("shingle"))
+
+
 def shingle_sets(df: DataFrame, id_col: str, text_col: str,
                  k: int = 3) -> DataFrame:
     """Distinct word-k-shingles per doc: (id, shingle) rows."""
-    return (df.select(F.col(id_col),
-                      F.explode(shingles(F.col(text_col), k)).alias("shingle"))
-            .distinct())
+    return _shingle_rows(df, id_col, text_col, k).distinct()
 
 
 def minhash_signatures(sh: DataFrame, id_col: str,
@@ -146,7 +132,8 @@ def lsh_candidate_pairs(bands_df: DataFrame, id_col: str,
 
 
 def pair_jaccard(pairs: DataFrame, sh: DataFrame, id_col: str) -> DataFrame:
-    """Exact Jaccard for given pairs from the distinct-shingle rows:
+    """Exact Jaccard for given pairs from (id, shingle) rows (repeats
+    allowed -- each doc's set is a ``collect_set``):
     each candidate doc's shingle set is collected ONCE, the pair list
     joins its two set arrays, and |A∩B| is a per-row
     ``array_intersect`` -- |A∪B| = |A|+|B|-|A∩B|, integer counts ->
@@ -222,22 +209,16 @@ def minhash_lsh_dedup(df: DataFrame, id_col: str = "doc_id",
     j=0.5); verification removes false positives, so the output equals
     brute-force Jaccard dedup restricted to LSH-recalled pairs."""
     rows_per_band = num_hashes // bands
-    # the shingle table feeds the signature AND the verification
+    # the shingle rows feed the signature AND the verification
     # self-join; the signature->bands->pairs chain is linear (single
-    # consumer each) so only sh and the final pairs materialize.
-    # _widen, COMPUTE-GATED (round 12): the round-robin re-spread of
-    # the AQE-byte-coalesced checkpoint pays a full shuffle of the
-    # shingle table to buy parallelism for the num_hashes x md5
-    # signature aggregate -- a win only when the freed compute exceeds
-    # the shuffle.  Measured at bench scale (driver r11): 32 hashes
-    # 1.19x FASTER widened, 12 hashes 0.84x SLOWER (the shuffle cost
-    # exceeds 12 hashes of freed md5 work).  Gate at >= 24 hashes: the
-    # sharp operating point widens, the default stays on the
-    # AQE-chosen layout.  At 100 TB the table is wider than the
-    # cluster and _widen is a no-op either way.
-    sh = _hold(shingle_sets(df, id_col, text_col, k_shingle))
-    if num_hashes >= 24:
-        sh = _widen(sh)
+    # consumer each) so only sh and the final pairs materialize.  The
+    # rows are held WITHOUT a distinct: min is idempotent and
+    # pair_jaccard collects sets, so repeats change neither result,
+    # and with no shuffle the held table keeps the scan's partitions.
+    # A distinct's exchange came out of AQE coalesced to one partition
+    # at bench scale, which ran the num_hashes x md5 signature
+    # aggregate as one task.
+    sh = _hold(_shingle_rows(df, id_col, text_col, k_shingle))
     sig = minhash_signatures(sh, id_col, num_hashes)
     cand = lsh_candidate_pairs(lsh_bands(sig, id_col, bands, rows_per_band),
                                id_col, max_bucket_size=max_bucket_size)

@@ -233,14 +233,9 @@ def dsir_weights(df: DataFrame, target_pred, n_buckets: int = 256,
     is read once and nothing larger than (docs x touched-buckets)
     shuffles.  Docs with fewer than 2 tokens have no features and are
     absent from the output (their weight is undefined, not 0)."""
-    from .text import tokens
-    toks = tokens(F.col(text_col))
-    bg = F.when(
-        F.size(toks) >= 2,
-        F.transform(F.sequence(F.lit(1), F.size(toks) - 1),
-                    lambda i: F.concat(F.element_at(toks, i), F.lit(" "),
-                                       F.element_at(toks, i + 1)))
-    ).otherwise(F.array().cast("array<string>"))
+    from .text import shingles
+    # word bigrams are the 2-shingles, which tokenize each doc once
+    bg = shingles(F.col(text_col), 2)
     bucket = F.pmod(
         F.conv(F.substring(F.md5(F.col("bgm")), 1, hex_digits), 16, 10)
         .cast("long"), F.lit(n_buckets))

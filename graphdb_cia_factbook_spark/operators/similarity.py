@@ -49,7 +49,14 @@ def norm_sq(a: Column) -> Column:
 def cosine(a: Column, b: Column) -> Column:
     """Cosine similarity = dot / sqrt(|a|^2 * |b|^2) (single sqrt --
     the exact formula the DuckDB oracles mirror)."""
-    return dot(a, b) / F.sqrt(norm_sq(a) * norm_sq(b))
+    return cosine_normed(a, b, norm_sq(a), norm_sq(b))
+
+
+def cosine_normed(a: Column, b: Column, na: Column, nb: Column) -> Column:
+    """:func:`cosine` with the squared norms ``na``/``nb`` given --
+    columns computed once per vector before a pair join, so each pair
+    folds only its dot product.  Bit-identical to :func:`cosine`."""
+    return dot(a, b) / F.sqrt(na * nb)
 
 
 def sign_signature(vec: Column, nbits: int = 8) -> Column:
@@ -95,13 +102,17 @@ def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     decimals for cross-engine hash stability (the underlying ordering
     uses full precision)."""
     q = queries.select(F.col(id_col).alias("query_id"),
-                       F.col(vec_col).alias("__qv"))
+                       F.col(vec_col).alias("__qv"),
+                       norm_sq(F.col(vec_col)).alias("__qn"))
     c = corpus.select(F.col(id_col).alias("neighbor_id"),
-                      F.col(vec_col).alias("__cv"))
+                      F.col(vec_col).alias("__cv"),
+                      norm_sq(F.col(vec_col)).alias("__cn"))
     scored = (c.crossJoin(F.broadcast(q))
               .where(F.col("neighbor_id") != F.col("query_id"))
               .select("query_id", "neighbor_id",
-                      cosine(F.col("__qv"), F.col("__cv")).alias("cos")))
+                      cosine_normed(F.col("__qv"), F.col("__cv"),
+                                    F.col("__qn"), F.col("__cn"))
+                      .alias("cos")))
     return (topk_per_query(scored, k)
             .select("query_id", "neighbor_id", "rank",
                     F.round("cos", 6).alias("cos")))
@@ -704,14 +715,17 @@ def quantize_embeddings(emb: DataFrame, id_col: str = "vec_id",
     Pure higher-order functions (transform / array_max / aggregate);
     zero-vectors quantize to all-zero with scale 0."""
     v = F.col(vec_col)
-    scale = F.array_max(F.transform(v, lambda x: F.abs(x))) \
-        .cast("double") / 127.0
+    scale = F.col("scale")
+    # scale is a column before the quantize lambda reads it: inside the
+    # lambda the array_max fold would re-run per element, O(dim^2)
+    scaled = emb.select(F.col(id_col), v,
+                        (F.array_max(F.transform(v, lambda x: F.abs(x)))
+                         .cast("double") / 127.0).alias("scale"))
     q = F.when(scale > 0,
                F.transform(v, lambda x: F.round(x.cast("double") / scale)
                            .cast("int"))) \
         .otherwise(F.transform(v, lambda x: F.lit(0)))
-    return emb.select(F.col(id_col), q.alias("q"),
-                      scale.alias("scale"))
+    return scaled.select(F.col(id_col), q.alias("q"), scale)
 
 
 def int8_dot(qa, qb, sa, sb):

@@ -158,13 +158,21 @@ def lang_id(col: Column) -> Column:
 
 def shingles(col: Column, k: int = 3) -> Column:
     """Word k-shingles as space-joined strings; empty array when the
-    document has fewer than k tokens."""
-    t = tokens(col)
-    return F.when(
-        F.size(t) >= k,
-        F.transform(F.sequence(F.lit(1), F.size(t) - (k - 1)),
-                    lambda i: F.concat_ws(" ", F.slice(t, i, k)))
-    ).otherwise(F.array().cast("array<string>"))
+    document has fewer than k tokens.
+
+    Spark evaluates a lambda body once per array element, re-deriving
+    every expression in it, so the token array is bound ONCE as a
+    lambda variable (a one-element ``transform``) and shingle i joins
+    element i of k shifted slices zipped side by side.  A lambda that
+    called ``tokens(col)`` itself re-split the document per shingle:
+    O(tokens^2) regex work per document."""
+    def shingled(t: Column) -> Column:
+        n = F.size(t) - (k - 1)
+        zipped = F.arrays_zip(*[F.slice(t, j + 1, n) for j in range(k)])
+        return F.when(n > 0, F.transform(zipped, lambda s: F.concat_ws(
+            " ", *[s[str(j)] for j in range(k)]))
+        ).otherwise(F.array().cast("array<string>"))
+    return F.transform(F.array(tokens(col)), shingled)[0]
 
 
 def winnow_fingerprints(df: DataFrame, id_col: str = "doc_id",

@@ -95,6 +95,14 @@ def get_spark(app_name: str = "graphdb_cia_factbook_spark",
         # Volcano path for such stages instead (observed 6-20x on the
         # MinHash pipeline late in a session)
         .config("spark.sql.codegen.hugeMethodLimit", "8000")
+        # compiled whole-stage classes are cached by source text in an
+        # LRU of 100 entries by default, below one warm pass of the
+        # benchmark's scan_curation queries (about 160 distinct
+        # classes; graph_loops 71), so the LRU evicted every class
+        # before its next use and each pass recompiled them all with
+        # Janino (~0.8s/pass).  2000 is well above one session's
+        # working set.  A static conf: only a fresh session takes it.
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
         .config("spark.ui.enabled", "false")
     )
     spark = builder.getOrCreate()

@@ -6,6 +6,8 @@ Kept to few examples per property -- each example is a Spark job; the
 point is random STRUCTURE (dup keys, ties, empties, singletons), not
 volume."""
 
+import re
+
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -572,6 +574,38 @@ def test_temporal_cooccurrence_equals_pair_form(spark, members, rounds):
         pair = {u: (seed_arr if u == seed else TEMPORAL_UNREACHED)
                 for u in users}
     assert bucket == pair
+
+
+def _py_shingles(text, k):
+    """Reference word k-shingles, mirroring operators.text.tokens:
+    Spark's trim strips spaces only, then Java's ``\\s+`` split."""
+    if text is None:
+        return []
+    toks = re.split(r"\s+", text.strip(" "), flags=re.ASCII)
+    return [" ".join(toks[i:i + k]) for i in range(len(toks) - k + 1)]
+
+
+@given(texts=st.lists(
+    st.one_of(st.none(),
+              st.lists(st.sampled_from(["a", "bb", "c", " ", "  ", "\t",
+                                        "\n"]), max_size=30)
+              .map("".join)),
+    min_size=1, max_size=12))
+@settings(**SETTINGS)
+def test_shingles_match_python_reference(spark, texts):
+    """text.shingles equals a pure-Python shingler element for element
+    and in order, for k = 2..5: null, empty, fewer-than-k and
+    whitespace-heavy texts (runs, tabs, newlines, leading and trailing
+    blanks) included."""
+    from graphdb_cia_factbook_spark.operators.text import shingles
+    texts = [None, "", "a", "a b", " a  b\tc\n\nd e "] + texts
+    df = spark.createDataFrame(list(enumerate(texts)), "id int, text string")
+    ks = range(2, 6)
+    got = df.select("id", *[shingles(F.col("text"), k).alias(f"k{k}")
+                            for k in ks]).collect()
+    for r in got:
+        for k in ks:
+            assert r[f"k{k}"] == _py_shingles(texts[r.id], k), (texts[r.id], k)
 
 
 @given(docs=st.lists(

@@ -1,13 +1,15 @@
 """Round-12 optimization internals: scoped session confs, the
-_small_loop_mode diet scoping, and the compute-gated MinHash widen.
+_small_loop_mode diet scoping, the MinHash signature width and the
+compiled-class cache.
 
 These pin the behaviors the round-12 optimizations rely on, so a later
 edit cannot silently (a) leave a session's AQE or shuffle width
 changed after a loop -- on return or on an exception -- or write a
 conf outside the one scoped mechanism, (b) leak the loop diet's
-shuffle width into the rest of a query, or (c) re-introduce the
-unconditional widen shuffle on the cheap operating point (the
-round-11 llm_minhash_lsh 0.84x regression)."""
+shuffle width into the rest of a query, (c) narrow the MinHash
+signature aggregate below the scan's width (a shuffle before it that
+AQE coalesces to one task), or (d) recompile generated classes on
+every pass (a compiled-class cache smaller than a pass)."""
 
 from __future__ import annotations
 
@@ -149,25 +151,58 @@ def test_conf_writes_only_in_scoped_conf_and_entry_hygiene():
                      ("registry", "_prepare_session")}
 
 
-def _minhash_plan(spark, num_hashes: int, bands: int) -> str:
-    from graphdb_cia_factbook_spark.operators.dedup import minhash_lsh_dedup
-    docs = spark.createDataFrame(
-        [(i, f"alpha beta gamma delta epsilon zeta doc{i % 3}")
-         for i in range(12)], ["doc_id", "text"])
-    out = minhash_lsh_dedup(docs, num_hashes=num_hashes, bands=bands)
-    plan = out._sc._jvm.PythonSQLUtils.explainString(
-        out._jdf.queryExecution(), "formatted")
-    clear_scratch(spark)
-    return plan
+def test_minhash_signature_reads_the_scan_width(spark, monkeypatch):
+    """MinHash holds the exploded (id, shingle) rows with no shuffle:
+    no REPARTITION_BY_NUM widen at 12 or 32 hashes, and the signature
+    aggregate's input keeps the scan's partition count (a distinct's
+    AQE-coalesced exchange narrowed it to one task)."""
+    from graphdb_cia_factbook_spark.operators import dedup
+
+    widths = []
+    signatures = dedup.minhash_signatures
+
+    def spy(sh, *args, **kwargs):
+        widths.append(sh.rdd.getNumPartitions())
+        return signatures(sh, *args, **kwargs)
+
+    monkeypatch.setattr(dedup, "minhash_signatures", spy)
+    rows = [(i, f"alpha beta gamma delta epsilon zeta doc{i % 3}")
+            for i in range(12)]
+    docs = spark.sparkContext.parallelize(rows, 3).toDF(["doc_id", "text"])
+    for num_hashes, bands in ((12, 4), (32, 8)):
+        out = dedup.minhash_lsh_dedup(docs, num_hashes=num_hashes,
+                                      bands=bands)
+        plan = out._sc._jvm.PythonSQLUtils.explainString(
+            out._jdf.queryExecution(), "formatted")
+        clear_scratch(spark)
+        assert "REPARTITION_BY_NUM" not in plan
+    assert widths == [3, 3]
 
 
-def test_widen_gate_only_on_hash_heavy_point(spark):
-    """The REPARTITION_BY_NUM widen shuffle appears on the 32-hash
-    sharp operating point and NOT on the 12-hash default (which the
-    unconditional widen regressed 0.84x in round 11)."""
-    # NOTE: the widen is a no-op when the checkpointed shingle table
-    # is already cluster-wide, so assert only the cheap-point absence
-    # unconditionally and the sharp-point presence when the table
-    # came out narrower than the cluster (always true for 12 docs).
-    assert "REPARTITION_BY_NUM" not in _minhash_plan(spark, 12, 4)
-    assert "REPARTITION_BY_NUM" in _minhash_plan(spark, 32, 8)
+def test_second_pass_compiles_no_classes(spark):
+    """Each generated class is compiled once per session: a second
+    pass over the benchmark's scan_curation queries compiles nothing.
+    One pass generates 160-odd distinct classes; with Spark's default
+    cache of 100 compiled classes the LRU evicted every class before
+    its next use, so each pass compiled them all again."""
+    import json
+    from pathlib import Path
+
+    from graphdb_cia_factbook_spark import registry
+    spec = json.loads((Path(__file__).resolve().parents[1] / "perfbench"
+                       / "workloads.json").read_text())
+    names = [q["query"]
+             for q in spec["workloads"]["scan_curation"]["queries"]]
+    qs = registry.queries()
+    compiled = (spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+                .METRIC_COMPILATION_TIME())
+
+    def one_pass() -> int:
+        before = compiled.getCount()
+        for name in names:
+            qs[name](spark, SF).write.format("noop").mode("overwrite").save()
+            clear_scratch(spark)
+        return compiled.getCount() - before
+
+    one_pass()
+    assert one_pass() == 0
