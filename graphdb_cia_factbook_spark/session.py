@@ -12,6 +12,11 @@ nevertheless the one we would ship to a 1000-executor cluster reading
   transfers columnar batches, not pickled rows.
 - Session timezone pinned to UTC so timestamp semantics match the DuckDB
   oracle (and any other engine) bit-for-bit.
+- The driver JVM starts from an application class-data archive (JDK
+  AppCDS) when the classpath allows it: it maps the ~13k classes an
+  earlier JVM loaded instead of loading, parsing and verifying them
+  again, which halves session start.  The first JVM writes the archive
+  at exit (:func:`class_archive` says which one a session mapped).
 
 Operators never change a session conf for good: a loop that needs
 different physical settings runs inside :func:`scoped_conf`, which puts
@@ -20,10 +25,16 @@ the caller's values back when the loop exits, by return or by raise.
 
 from __future__ import annotations
 
+import hashlib
 import os
+import shutil
+import subprocess
+import uuid
 from collections.abc import Iterator, Mapping
-from contextlib import contextmanager
+from contextlib import contextmanager, suppress
 
+from pyspark import SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
 
@@ -64,11 +75,196 @@ def _default_driver_memory() -> str:
     return f"{min(48 * 1024, mb)}m"
 
 
+#: Application class-data archives of the driver JVM, in the checkout
+#: beside the package: ``<key>.jsa`` per JDK and Spark jar set, the
+#: ``<key>.<id>.part`` a JVM writes at exit with that JVM's pid in
+#: ``<key>.<id>.part.pid``, and ``conf/``, an empty stand-in for a
+#: Spark conf dir that holds only templates.
+_CDS_DIR = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".cds")
+
+#: Variables the Spark launcher adds to the driver's classpath.  The
+#: JVM will not archive classes from a classpath that lists a non-empty
+#: directory, so any of them turns the archive off.
+_CLASSPATH_ENV = ("HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH",
+                  "SPARK_PREPEND_CLASSES", "SPARK_TESTING")
+
+#: The JVM that writes an archive warns on stdout, where tools print
+#: their results, about each class it skips (~600 lines at exit: signed
+#: jars, JFR events, pre-JDK-6 generated accessors); keep only errors,
+#: on stderr.
+_CDS_LOG = ("-Xlog:cds*=off", "-Xlog:cds*=error:stderr")
+
+
+def _java_home() -> str | None:
+    """The JDK the Spark launcher runs: ``JAVA_HOME``, else the one of
+    the ``java`` on ``PATH``."""
+    if os.environ.get("JAVA_HOME"):
+        return os.environ["JAVA_HOME"]
+    java = shutil.which("java")
+    return os.path.dirname(os.path.dirname(os.path.realpath(java))) \
+        if java else None
+
+
+def _archive_key(java_home: str, spark_home: str) -> str:
+    """A hash of the JDK's ``release`` file and the name, size and mtime
+    of every Spark jar.  The heap size is left out: an archive written
+    by a 2g-heap JVM maps into an 8g-heap one."""
+    h = hashlib.sha256()
+    with open(os.path.join(java_home, "release"), "rb") as f:
+        h.update(f.read())
+    for entry in sorted(os.scandir(os.path.join(spark_home, "jars")),
+                        key=lambda e: e.name):
+        st = entry.stat()
+        h.update(f"{entry.name} {st.st_size} {st.st_mtime_ns}\n".encode())
+    return h.hexdigest()[:16]
+
+
+def _starts_from(archive: str) -> bool:
+    """Whether ``java -version`` started from ``archive`` exits 0.  A
+    truncated archive kills the JVM that maps it (SIGBUS); one that
+    does not fit is ignored, which the caller finds out after start."""
+    java = os.path.join(_java_home(), "bin", "java")
+    try:
+        return subprocess.run(
+            [java, f"-XX:SharedArchiveFile={archive}",
+             "-XX:-CreateCoredumpOnCrash", "-XX:ErrorFile=/dev/null",
+             "-version"], stdout=subprocess.DEVNULL,
+            stderr=subprocess.DEVNULL, timeout=60).returncode == 0
+    except subprocess.TimeoutExpired:
+        return False
+
+
+def _writing(pidfile: str, part: str) -> bool:
+    """Whether the JVM recorded in ``pidfile`` still runs (and may still
+    be writing ``part``); the command line tells a reused pid apart."""
+    try:
+        with open(pidfile) as f:
+            pid = int(f.read())
+        with open(f"/proc/{pid}/cmdline", "rb") as f:
+            return part.encode() in f.read()
+    except (OSError, ValueError):
+        return False
+
+
+def _settle_parts() -> None:
+    """Publish the archives of JVMs that have exited, or delete them.
+
+    A ``.part`` becomes ``<key>.jsa`` only through ``os.replace``, only
+    after the JVM recorded beside it has exited, and only when a child
+    JVM starts from it; every other leftover is deleted."""
+    parts = {n.removesuffix(".pid") for n in os.listdir(_CDS_DIR)
+             if n.endswith((".part", ".part.pid"))}
+    for name in parts:
+        part = os.path.join(_CDS_DIR, name)
+        pidfile = part + ".pid"
+        if _writing(pidfile, part):
+            continue
+        archive = os.path.join(_CDS_DIR, name.split(".", 1)[0] + ".jsa")
+        if (os.path.exists(part) and os.path.exists(pidfile)
+                and not os.path.exists(archive) and _starts_from(part)):
+            with suppress(FileNotFoundError):
+                os.replace(part, archive)
+        for path in (part, pidfile):
+            with suppress(FileNotFoundError):
+                os.remove(path)
+
+
+def _archive_plan() -> tuple[list[str], dict[str, str]]:
+    """JVM flags and launch environment for a new driver JVM: map the
+    archive when a complete one exists, else write one at exit.
+    ``([], {})`` when the classpath rules the archive out.
+
+    The launcher puts the Spark conf dir on the classpath.  A caller's
+    ``SPARK_CONF_DIR`` is never replaced: it must be empty.  Unset, it
+    points at the empty ``conf/`` here when ``$SPARK_HOME/conf`` holds
+    only ``*.template`` files, which Spark never reads."""
+    java_home, spark_home = _java_home(), _find_spark_home()
+    if java_home is None or any(os.environ.get(v) for v in _CLASSPATH_ENV):
+        return [], {}
+    conf = os.path.join(_CDS_DIR, "conf")
+    try:
+        key = _archive_key(java_home, spark_home)
+        if os.environ.get("SPARK_CONF_DIR"):
+            if os.listdir(os.environ["SPARK_CONF_DIR"]):
+                return [], {}
+            env = {}
+        elif all(n.endswith(".template")
+                 for n in os.listdir(os.path.join(spark_home, "conf"))):
+            env = {"SPARK_CONF_DIR": conf}
+        else:
+            return [], {}
+        os.makedirs(conf, exist_ok=True)
+        _settle_parts()
+    except OSError:
+        return [], {}
+    archive = os.path.join(_CDS_DIR, f"{key}.jsa")
+    if os.path.exists(archive):
+        flag = f"-XX:SharedArchiveFile={archive}"
+    else:
+        part = os.path.join(_CDS_DIR, f"{key}.{uuid.uuid4().hex}.part")
+        flag = f"-XX:ArchiveClassesAtExit={part}"
+    return [flag, *_CDS_LOG], env
+
+
+@contextmanager
+def _environ(env: Mapping[str, str]) -> Iterator[None]:
+    """``os.environ`` updated with ``env`` for the body, then restored."""
+    prior = {key: os.environ.get(key) for key in env}
+    os.environ.update(env)
+    try:
+        yield
+    finally:
+        for key, value in prior.items():
+            if value is None:
+                del os.environ[key]
+            else:
+                os.environ[key] = value
+
+
+def _jvm_pid(spark: SparkSession) -> int:
+    return spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid()
+
+
+def class_archive(spark: SparkSession) -> str | None:
+    """The application class-data archive the driver JVM has mapped,
+    read from ``/proc/<pid>/maps``, or None when the JVM loaded its
+    classes from the jars."""
+    cds = os.path.realpath(_CDS_DIR) + os.sep
+    with open(f"/proc/{_jvm_pid(spark)}/maps") as f:
+        for line in f:
+            fields = line.split(maxsplit=5)
+            if len(fields) == 6:
+                path = fields[5].rstrip("\n")
+                if path.startswith(cds) and path.endswith(".jsa"):
+                    return path
+    return None
+
+
+def _after_start(spark: SparkSession, flags: list[str]) -> None:
+    """Record the pid of a JVM that writes an archive at exit, and delete
+    an archive the JVM did not map (garbage, or one written for another
+    classpath) so that the next start writes a good one."""
+    if not flags:
+        return
+    option, _, path = flags[0].partition("=")
+    if option == "-XX:ArchiveClassesAtExit":
+        with open(path + ".pid", "w") as f:
+            f.write(str(_jvm_pid(spark)))
+    elif class_archive(spark) is None:
+        with suppress(FileNotFoundError):
+            os.remove(path)
+
+
 def get_spark(app_name: str = "graphdb_cia_factbook_spark",
               shuffle_partitions: int | None = None) -> SparkSession:
     cpus = local_cpus()
     shuffle = shuffle_partitions or int(
         os.environ.get("SPARK_SHUFFLE_PARTITIONS", cpus))
+    # the archive flags only reach a JVM this call launches
+    launches = (SparkContext._gateway is None
+                and "PYSPARK_GATEWAY_PORT" not in os.environ)
+    flags, env = _archive_plan() if launches else ([], {})
     builder = (
         SparkSession.builder
         .master(f"local[{cpus}]")
@@ -86,8 +282,9 @@ def get_spark(app_name: str = "graphdb_cia_factbook_spark",
         # (60+ queries) fills the default 240m JIT code cache, after
         # which HotSpot stops compiling and everything runs interpreted
         # (observed 10x+ slowdowns late in a session)
-        .config("spark.driver.extraJavaOptions",
-                "-XX:ReservedCodeCacheSize=1g -XX:+UseCodeCacheFlushing")
+        .config("spark.driver.extraJavaOptions", " ".join(
+            ["-XX:ReservedCodeCacheSize=1g", "-XX:+UseCodeCacheFlushing",
+             *flags]))
         # generated methods above HotSpot's 8000-bytecode HugeMethodLimit
         # are NEVER JIT-compiled; wide fused stages (12-column min-hash
         # aggregates) hit this and run interpreted with pathological
@@ -105,7 +302,9 @@ def get_spark(app_name: str = "graphdb_cia_factbook_spark",
         .config("spark.sql.codegen.cache.maxEntries", "2000")
         .config("spark.ui.enabled", "false")
     )
-    spark = builder.getOrCreate()
+    with _environ(env):
+        spark = builder.getOrCreate()
+    _after_start(spark, flags)
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
