@@ -16,8 +16,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .operators.graph import build_trade_graph, pagerank
+from .session import scoped_build
 
 
+@scoped_build
 def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     # hold: the edge table feeds BOTH the rank loop (which checkpoints
     # its own share-normalized copy during construction) and the

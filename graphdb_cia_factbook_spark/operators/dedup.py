@@ -326,8 +326,7 @@ def _attach_sides(counts: DataFrame, side: DataFrame, id_col: str,
 
 def _counted_scores(pairs: DataFrame, side: DataFrame, id_col: str,
                     raw_pairs: int, score,
-                    max_pairs_per_pass: int = 800_000_000,
-                    scratch_dir: str | None = None) -> DataFrame:
+                    max_pairs_per_pass: int = 800_000_000) -> DataFrame:
     """Aggregate a raw co-occurrence pair stream to per-pair counts,
     attach the scoring sides, and apply ``score`` (projection +
     threshold filter) -- SLICED when the measured raw volume exceeds
@@ -347,14 +346,8 @@ def _counted_scores(pairs: DataFrame, side: DataFrame, id_col: str,
     construction, and per-pair independence makes the union
     identical to the single-pass result.  On a real cluster the
     budget rises with aggregate shuffle capacity (it is a per-PASS
-    spill bound, not a semantics knob).
-
-    ``scratch_dir``: root for the sliced-pass survivor spill (the
-    ``brute_topk_arrow_blocked`` contract) -- when ``None`` the
-    shared ``/root/repo/scratch`` root is used and the directory is
-    registered with :func:`session.clear_scratch` for reclamation;
-    callers who pass their own root own that directory's lifecycle
-    themselves."""
+    spill bound, not a semantics knob).  The survivors spill to a
+    :func:`session.spill_dir`, which the build's scope deletes."""
     n_slices = int(raw_pairs // max_pairs_per_pass) + 1
     width = max(32, min(4096,
                         int(raw_pairs // n_slices // 4_000_000) + 1))
@@ -367,14 +360,9 @@ def _counted_scores(pairs: DataFrame, side: DataFrame, id_col: str,
 
     if n_slices <= 1:
         return one(pairs)
-    import uuid
-
-    from ..session import track_scratch_dir
+    from ..session import spill_dir
     spark = pairs.sparkSession
-    out = ((scratch_dir or "/root/repo/scratch")
-           + f"/pair_slices_{uuid.uuid4().hex[:12]}")
-    if scratch_dir is None:
-        track_scratch_dir(out)
+    out = spill_dir("pair_slices")
     key = F.pmod(F.xxhash64("id_a", "id_b"), F.lit(n_slices))
     schema = None
     for s in range(n_slices):
@@ -387,8 +375,7 @@ def _counted_scores(pairs: DataFrame, side: DataFrame, id_col: str,
 def ngram_jaccard_dedup(df: DataFrame, id_col: str = "doc_id",
                         text_col: str = "text", k_shingle: int = 3,
                         threshold: float = 0.8,
-                        max_shingle_df: int = 1000,
-                        scratch_dir: str | None = None) -> DataFrame:
+                        max_shingle_df: int = 1000) -> DataFrame:
     """Brute n-gram Jaccard: all pairs sharing >= 1 sufficiently-rare
     shingle, exact Jaccard >= threshold over the FULL shingle sets.
 
@@ -459,8 +446,7 @@ def ngram_jaccard_dedup(df: DataFrame, id_col: str = "doc_id",
                 .where(F.col("jaccard") >= threshold))
 
     return _counted_scores(pairs.select("p.id_a", "p.id_b"), side,
-                           id_col, int(raw_pairs), _score,
-                           scratch_dir=scratch_dir)
+                           id_col, int(raw_pairs), _score)
 
 
 def decontaminate(train: DataFrame, benchmark: DataFrame,
@@ -564,8 +550,7 @@ def simhash_neardup_pairs(df: DataFrame, id_col: str = "doc_id",
 def winnow_containment(df: DataFrame, id_col: str = "doc_id",
                        text_col: str = "text", k_shingle: int = 3,
                        window: int = 4, min_containment: float = 0.5,
-                       max_fp_df: int = 1000,
-                       scratch_dir: str | None = None) -> DataFrame:
+                       max_fp_df: int = 1000) -> DataFrame:
     """CONTAINMENT detection via winnowing fingerprints: for ordered
     pairs (a, b), ``containment = |fp(a) ∩ fp(b)| / |fp(a)|`` -- near
     1.0 when document a's content appears inside b even if b is much
@@ -635,8 +620,7 @@ def winnow_containment(df: DataFrame, id_col: str = "doc_id",
                 .where(F.col("containment") >= min_containment))
 
     return _counted_scores(pairs.select("p.id_a", "p.id_b"), side,
-                           id_col, int(raw_pairs), _score,
-                           scratch_dir=scratch_dir)
+                           id_col, int(raw_pairs), _score)
 
 
 def span_dedup(df: DataFrame, span: int = 10, id_col: str = "doc_id",

@@ -149,23 +149,21 @@ def brute_topk_arrow(corpus: DataFrame, queries: DataFrame, k: int,
     sequentially materialized) or the LSH/IVF candidate paths -- the
     same ceiling, documented in the same place, as the BNLJ shape.
 
-    EAGER-CONSTRUCTION NOTE (sweep tooling): the query-side collect
-    and the broadcast creation run when this function is CALLED, not
-    when the returned DataFrame is evaluated -- a registry sweep that
-    builds many entries before acting fires one small job per call.
-    The broadcast is registered with :func:`session.track_broadcast`
-    so ``session.clear_scratch`` releases executor copies between
-    logically independent queries (the driver copy frees with the
-    DataFrame's closure at gc)."""
+    The query-side collect and the broadcast run when this function is
+    CALLED, not when the result is evaluated; the build's scope owns the
+    broadcast (:func:`session.track_broadcast`)."""
     spark = corpus.sparkSession
     qrows = queries.select(id_col, vec_col).collect()
     if not qrows:
         return spark.createDataFrame(
             [], schema="query_id long, neighbor_id long, cos double, "
                        "rank integer")
+    from ..session import track_broadcast
+
     qids, qmat, qn = _query_matrix(qrows, dim)
-    part, _ = _arrow_phase1(corpus, qids, qmat, qn, k, dim,
-                            id_col, vec_col)
+    part, bc = _arrow_phase1(corpus, qids, qmat, qn, k, dim,
+                             id_col, vec_col)
+    track_broadcast(bc)
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"),
                                                F.asc("neighbor_id"))
     return (part.withColumn("rank", F.row_number().over(w))
@@ -195,26 +193,17 @@ def _query_matrix(qrows, dim: int):
 
 
 def _arrow_phase1(corpus: DataFrame, qids, qmat, qn, k: int, dim: int,
-                  id_col: str, vec_col: str, track: bool = True):
+                  id_col: str, vec_col: str):
     """Phase-1 scoring: broadcast one query block, stream corpus
     partitions through the vectorized kernel, emit each partition's
     per-query top-k candidates (Q * partitions * k rows max).
-    Returns (candidates DataFrame, broadcast handle) so callers that
-    materialize eagerly can unpersist the block immediately.
-
-    ``track=False`` skips :func:`session.track_broadcast` for callers
-    that own the broadcast lifecycle themselves (the blocked variant
-    destroys each block right after materializing it) -- registering
-    those would grow ``_TRACKED_BROADCASTS`` with dead handles that
-    pin the Python Broadcast objects until the next clear_scratch."""
+    Returns (candidates DataFrame, broadcast handle): the caller
+    either hands the broadcast to its scope or, having materialized
+    the candidates, destroys it at once."""
     import numpy as np
-
-    from ..session import track_broadcast
 
     spark = corpus.sparkSession
     bc = spark.sparkContext.broadcast((qids, qmat, qn))
-    if track:
-        track_broadcast(bc)
 
     n_q = len(qids)
     chunk_rows = max(64, min(2048, (48 << 20) // max(n_q, 1) // 8))
@@ -291,8 +280,7 @@ def _arrow_phase1(corpus: DataFrame, qids, qmat, qn, k: int, dim: int,
 def brute_topk_arrow_blocked(corpus: DataFrame, queries: DataFrame,
                              k: int, dim: int, id_col: str = "vec_id",
                              vec_col: str = "embedding",
-                             block_rows: int = 262_144,
-                             scratch_dir: str | None = None) -> DataFrame:
+                             block_rows: int = 262_144) -> DataFrame:
     """:func:`brute_topk_arrow` without the single-collect ceiling:
     the query side streams through the driver in BOUNDED blocks.
 
@@ -316,7 +304,6 @@ def brute_topk_arrow_blocked(corpus: DataFrame, queries: DataFrame,
     1e9-query scale where this path engages, Q dominates N or the
     LSH/IVF candidate paths apply instead."""
     import math
-    import uuid
 
     spark = corpus.sparkSession
     n_q = queries.select(id_col).count()
@@ -324,18 +311,12 @@ def brute_topk_arrow_blocked(corpus: DataFrame, queries: DataFrame,
         return spark.createDataFrame(
             [], schema="query_id long, neighbor_id long, cos double, "
                        "rank integer")
-    from ..session import track_scratch_dir
+    from ..session import spill_dir
 
     n_blocks = max(1, math.ceil(n_q / block_rows))
-    # the returned DataFrame reads this directory lazily, so it cannot
-    # be deleted here; when spilling under the default scratch root it
-    # is registered with session so clear_scratch reclaims it between
-    # logically independent queries (callers who pass scratch_dir own
-    # that directory's lifecycle themselves)
-    out = ((scratch_dir or "/root/repo/scratch")
-           + f"/topk_blocks_{uuid.uuid4().hex[:12]}")
-    if scratch_dir is None:
-        track_scratch_dir(out)
+    # the returned DataFrame reads this directory lazily, so the
+    # build's scope deletes it on release
+    out = spill_dir("topk_blocks")
     q = queries.select(id_col, vec_col)
     if n_blocks == 1:
         blocks = [q]
@@ -352,16 +333,12 @@ def brute_topk_arrow_blocked(corpus: DataFrame, queries: DataFrame,
             continue
         qids, qmat, qn = _query_matrix(qrows, dim)
         part, bc = _arrow_phase1(corpus, qids, qmat, qn, k, dim,
-                                 id_col, vec_col, track=False)
+                                 id_col, vec_col)
         part.write.mode("append").parquet(out)
         # the block's candidates are durably on disk -- no live
         # consumer remains, so destroy (not just unpersist) frees the
-        # driver copy too; track=False above keeps the dead handle out
-        # of session._TRACKED_BROADCASTS
-        try:
-            bc.destroy(blocking=False)
-        except TypeError:  # older destroy() signature
-            bc.destroy()
+        # driver copy too
+        bc.destroy(blocking=False)
     cand = spark.read.schema(
         "query_id long, neighbor_id long, cos double").parquet(out)
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"),

@@ -5431,9 +5431,8 @@ def llm_bitext_mining(spark, sf):
     unchanged across the swap (cfa646261480 / 6a8d4609c8cd).
 
     Construction is EAGER (the kernel collects the query side and
-    creates its broadcast when this entry is BUILT); sweep tooling
-    releases the broadcast via ``session.clear_scratch`` between
-    entries.  Past ~1e9 queries the blocked kernel
+    creates its broadcast when this entry is BUILT); the build's
+    scope releases the broadcast.  Past ~1e9 queries the blocked kernel
     (``similarity.brute_topk_arrow_blocked``, bit-identical, bounded
     driver memory) replaces the single collect."""
     from .operators.similarity import brute_topk_arrow

@@ -17,6 +17,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .session import local_cpus, release_unreferenced, scoped_build
+
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
 
@@ -26,11 +28,9 @@ def _prepare_session(spark: SparkSession) -> None:
     AND latency hold under ANY harness session (the driver passes its
     own vanilla SparkSession, not our tuned builder):
 
-    - drop scratch blocks left by PREVIOUS queries (iterative /
-      multi-consumer operators localCheckpoint; stale blocks degrade
-      later jobs 3-5x).  Safe here: the previous query's result has
-      been consumed by the time the next builder runs, and the current
-      query's checkpoints don't exist yet.
+    - release what earlier builds made once their results are gone
+      (stale checkpoint blocks degrade later jobs 3-5x); a result still
+      referenced keeps its blocks.
     - codegen hugeMethodLimit: wide fused stages otherwise generate
       methods HotSpot never JITs (multi-minute stalls late in a
       session).
@@ -39,11 +39,9 @@ def _prepare_session(spark: SparkSession) -> None:
       iterative operators (PageRank: 20 shuffles) into 200 near-empty
       tasks; gate latency then runs several times the bench latency
       for pure scheduling overhead.  On a real cluster this value is
-      the usual starting point that AQE re-plans per stage.
-    """
+      the usual starting point that AQE re-plans per stage."""
     try:
-        from .session import clear_scratch, local_cpus
-        clear_scratch(spark)
+        release_unreferenced(spark)
         spark.conf.set("spark.sql.codegen.hugeMethodLimit", "8000")
         spark.conf.set("spark.sql.shuffle.partitions", str(local_cpus()))
     except Exception:  # noqa: BLE001 -- hygiene must never fail a query
@@ -53,11 +51,14 @@ def _prepare_session(spark: SparkSession) -> None:
 def register(name: str, oracle: str | None = None):
     """Decorator: register a query builder + optional DuckDB oracle.
     Builders are wrapped with per-entry session hygiene
-    (:func:`_prepare_session`)."""
+    (:func:`_prepare_session`) and build in a scope of their own
+    (:func:`session.scoped_build`), which their result owns."""
     def deco(fn):
+        build = scoped_build(fn)
+
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
             _prepare_session(spark)
-            return fn(spark, sf_dir)
+            return build(spark, sf_dir)
         wrapped.__name__ = fn.__name__
         wrapped.__doc__ = fn.__doc__
         QUERIES[name] = wrapped

@@ -21,17 +21,28 @@ nevertheless the one we would ship to a 1000-executor cluster reading
 Operators never change a session conf for good: a loop that needs
 different physical settings runs inside :func:`scoped_conf`, which puts
 the caller's values back when the loop exits, by return or by raise.
+
+A query owns what its build made: each build runs in a scope
+(:func:`scoped_build`) of the checkpoints, broadcasts and spill dirs it
+made, released when the build raises, when a later registry entry finds
+its result unreferenced, or by :func:`clear_scratch`.
 """
 
 from __future__ import annotations
 
+import functools
+import gc
 import hashlib
 import os
 import shutil
 import subprocess
+import tempfile
 import uuid
+import weakref
 from collections.abc import Iterator, Mapping
 from contextlib import contextmanager, suppress
+from contextvars import ContextVar
+from dataclasses import dataclass, field
 
 from pyspark import SparkContext
 from pyspark.find_spark_home import _find_spark_home
@@ -309,76 +320,136 @@ def get_spark(app_name: str = "graphdb_cia_factbook_spark",
     return spark
 
 
-#: Broadcast variables created by operators (the Arrow top-k query
-#: blocks) register here so ``clear_scratch`` can release executor
-#: copies between logically independent queries -- otherwise repeated
-#: registry sweeps in one session accumulate broadcast memory.
-_TRACKED_BROADCASTS: list = []
+@dataclass(eq=False)
+class _Scope:
+    """What one build made, the application it ran in, and a weak
+    reference to its result (None: what operators registered outside a
+    build, which only :func:`clear_scratch` releases)."""
+    app: str | None = None
+    rdds: frozenset[int] = frozenset()
+    broadcasts: list = field(default_factory=list)
+    dirs: list[str] = field(default_factory=list)
+    result: weakref.ref | None = None
+
+
+#: The one registry of what the engine made: every unreleased scope.
+_SCOPES: list[_Scope] = []
+_BUILDING: ContextVar[_Scope | None] = ContextVar("_BUILDING", default=None)
+
+
+def _owner() -> _Scope:
+    """The running build's scope, else a new scope without a result."""
+    scope = _BUILDING.get()
+    if scope is None:
+        scope = _Scope()
+        _SCOPES.append(scope)
+    return scope
 
 
 def track_broadcast(bc):
-    """Register an operator-created broadcast for release by
-    :func:`clear_scratch`.  Returns ``bc`` unchanged."""
-    _TRACKED_BROADCASTS.append(bc)
+    """Hand an operator-created broadcast to the running build's scope,
+    which unpersists it on release.  Returns ``bc`` unchanged."""
+    _owner().broadcasts.append(bc)
     return bc
 
 
-#: Scratch parquet directories written by eager operators (the
-#: blocked Arrow top-k's phase-1 candidate spill) register here so
-#: ``clear_scratch`` can delete them -- the returned DataFrames read
-#: them lazily, so the operator itself can never know when the last
-#: consumer is done.  Same lifecycle caveat as localCheckpoints.
-_TRACKED_SCRATCH_DIRS: list[str] = []
-
-
-def track_scratch_dir(path: str) -> str:
-    """Register an operator-written scratch directory for deletion by
-    :func:`clear_scratch`.  Returns ``path`` unchanged."""
-    _TRACKED_SCRATCH_DIRS.append(path)
+def spill_dir(name: str) -> str:
+    """A new path for parquet that an operator spills and its result
+    reads lazily, below Spark's local dir (the first ``SPARK_LOCAL_DIRS``
+    entry, else the temp dir); the running build's scope deletes it."""
+    root = (os.environ.get("SPARK_LOCAL_DIRS", "").split(",")[0]
+            or tempfile.gettempdir())
+    path = os.path.join(root, f"{name}_{uuid.uuid4().hex[:12]}")
+    _owner().dirs.append(path)
     return path
 
 
-def clear_scratch(spark: SparkSession) -> int:
-    """Drop all persisted/checkpointed RDD blocks and cached plans.
+def _persistent_rdds(spark: SparkSession) -> set[int]:
+    """Ids of the context's persistent RDDs, read in one py4j call."""
+    keys = spark.sparkContext._jsc.getPersistentRDDs().keySet().toString()
+    return {int(k) for k in keys.strip("[]").split(",") if k.strip()}
 
-    Iterative operators (PageRank supersteps) and multi-consumer
-    pipelines (MinHash shingle/pair tables) materialize scratch via
-    ``localCheckpoint`` -- non-recomputable blocks that must outlive
-    their own query but are dead weight afterwards.  Leaving them in
-    the block manager measurably degrades every LATER job in the
-    session (observed 3-5x on the bench); run this between logically
-    independent queries.  Returns the number of RDDs dropped.  Session
-    confs are not its business: every loop restores its own on exit
-    (:func:`scoped_conf`).
 
-    CAUTION: call only when no live DataFrame still reads a
-    localCheckpoint -- checkpointed blocks are non-recomputable, so
-    clearing under a live consumer fails its next action."""
-    import gc
-
+def _unpersist(spark: SparkSession, rdds, local_only: bool = False) -> int:
+    """Unpersist (blocking) each of ``rdds`` still persistent, only the
+    locally checkpointed ones with ``local_only``; returns how many."""
     jrdds = spark.sparkContext._jsc.getPersistentRDDs()
-    ids = list(jrdds.keySet().toArray())
-    for rid in ids:
-        jrdds.get(rid).unpersist(True)
-    spark.catalog.clearCache()
-    # non-blocking: a still-live DataFrame that references a tracked
-    # broadcast can lazily re-broadcast from the driver copy
-    dropped_broadcasts = bool(_TRACKED_BROADCASTS)
-    while _TRACKED_BROADCASTS:
+    dropped = 0
+    for rid in rdds:
+        jrdd = jrdds.get(rid)
+        if jrdd is None or (local_only
+                            and not jrdd.rdd().isLocallyCheckpointed()):
+            continue
+        jrdd.unpersist(True)
+        dropped += 1
+    return dropped
+
+
+def _release(spark: SparkSession, scopes: list[_Scope]) -> int:
+    """Forget ``scopes``, unpersist their RDDs and broadcasts and delete
+    their spill dirs; a scope of another SparkContext unpersists nothing
+    (RDD ids restart in a new context).  Returns the RDDs unpersisted."""
+    app = spark.sparkContext.applicationId
+    dropped = 0
+    for scope in scopes:
+        _SCOPES.remove(scope)
+        if scope.app in (None, app):
+            dropped += _unpersist(spark, scope.rdds)
+            for bc in scope.broadcasts:
+                # non-blocking: a live DataFrame that still reads it
+                # re-broadcasts from the driver copy
+                with suppress(Exception):
+                    bc.unpersist(blocking=False)
+        for path in scope.dirs:
+            shutil.rmtree(path, ignore_errors=True)
+    return dropped
+
+
+def scoped_build(build):
+    """Decorator: run a query builder ``build(spark, *args)`` in a scope
+    of its own, which its result owns.  The scope takes the RDDs that
+    became persistent during the build (a diff of the context's ids: a
+    caller's ``cache()`` registers only at the caller's action) and what
+    the operators register.  A build that raises has its scope released
+    at once."""
+    @functools.wraps(build)
+    def run(spark: SparkSession, *args):
+        scope = _Scope(app=spark.sparkContext.applicationId)
+        before = _persistent_rdds(spark)
+        token = _BUILDING.set(scope)
         try:
-            _TRACKED_BROADCASTS.pop().unpersist(blocking=False)
-        except Exception:
-            pass
-    # scratch parquet spills (blocked Arrow top-k phase-1 candidates)
-    # -- non-recomputable like checkpoints: the same "no live
-    # consumer" caution above applies
-    import shutil
-    had_scratch = bool(_TRACKED_SCRATCH_DIRS) or dropped_broadcasts
-    while _TRACKED_SCRATCH_DIRS:
-        shutil.rmtree(_TRACKED_SCRATCH_DIRS.pop(), ignore_errors=True)
-    # gc releases the py4j handles of what was just dropped so the JVM
-    # side can actually free it -- pure overhead (~20ms/call) when this
-    # sweep found nothing, which is most queries in a bench pass
-    if ids or had_scratch:
+            result = build(spark, *args)
+            scope.result = weakref.ref(result)
+            return result
+        finally:
+            _BUILDING.reset(token)
+            scope.rdds = frozenset(_persistent_rdds(spark) - before)
+            _SCOPES.append(scope)
+            if scope.result is None:  # the build raised
+                _release(spark, [scope])
+    return run
+
+
+def release_unreferenced(spark: SparkSession) -> int:
+    """Release the scopes whose results are no longer referenced and
+    those of another SparkContext; returns the RDDs unpersisted."""
+    app = spark.sparkContext.applicationId
+    return _release(spark, [
+        s for s in _SCOPES if s.app not in (None, app)
+        or (s.result is not None and s.result() is None)])
+
+
+def clear_scratch(spark: SparkSession) -> int:
+    """Release everything the engine made, once the consumers of the
+    queries built so far are done: every scope, then every locally
+    checkpointed RDD still persistent (operators called outside a
+    build).  A caller's ``cache()``, the catalog cache and the session
+    confs are left alone.  Returns the number of RDDs unpersisted."""
+    owned = any(s.broadcasts or s.dirs for s in _SCOPES)
+    dropped = _release(spark, list(_SCOPES))
+    dropped += _unpersist(spark, _persistent_rdds(spark), local_only=True)
+    # gc frees the py4j handles of what was dropped so the JVM can free
+    # it; ~20ms of overhead when nothing was, as for most queries
+    if dropped or owned:
         gc.collect()
-    return len(ids)
+    return dropped

@@ -221,7 +221,7 @@ def test_brute_topk_arrow_bit_equal_to_catalyst(spark, emb):
     assert got == want  # bit-equal floats: == on raw doubles
 
 
-def test_brute_topk_arrow_blocked_bit_equal(spark, emb, tmp_path):
+def test_brute_topk_arrow_blocked_bit_equal(spark, emb):
     """The query-blocked kernel (bounded driver memory) must equal the
     all-at-once kernel EXACTLY when forced through multiple blocks:
     per-query independence makes each block's phase-1 pool identical
@@ -238,12 +238,11 @@ def test_brute_topk_arrow_blocked_bit_equal(spark, emb, tmp_path):
                                       dim=64).collect()}
     got = {(r.query_id, r.rank): (r.neighbor_id, r.cos)
            for r in brute_topk_arrow_blocked(
-               emb, queries, k=3, dim=64, block_rows=7,
-               scratch_dir=str(tmp_path)).collect()}
+               emb, queries, k=3, dim=64, block_rows=7).collect()}
     assert got == want  # bit-equal floats: == on raw doubles
 
 
-def test_brute_topk_arrow_empty_query_side(spark, emb, tmp_path):
+def test_brute_topk_arrow_empty_query_side(spark, emb):
     """Zero queries must return an empty frame with the declared
     schema, not crash on a 1-D (0,) numpy matrix (ADVICE round 8)."""
     from graphdb_cia_factbook_spark.operators.similarity import (
@@ -254,8 +253,7 @@ def test_brute_topk_arrow_empty_query_side(spark, emb, tmp_path):
     out = brute_topk_arrow(emb, none, k=3, dim=64)
     assert out.columns == ["query_id", "neighbor_id", "cos", "rank"]
     assert out.count() == 0
-    out2 = brute_topk_arrow_blocked(emb, none, k=3, dim=64,
-                                    scratch_dir=str(tmp_path))
+    out2 = brute_topk_arrow_blocked(emb, none, k=3, dim=64)
     assert out2.columns == out.columns and out2.count() == 0
 
 
@@ -1615,26 +1613,26 @@ def test_near_dup_pairs_arrow_bucket_parallelism_warning(spark):
                and "defaultParallelism" in str(x.message) for x in w)
 
 
-def test_blocked_topk_scratch_tracked_and_cleared(spark, emb):
-    """The blocked kernel's phase-1 parquet spill must not leak: a
-    default-scratch run registers its uuid directory with the session
-    tracker, and clear_scratch deletes it (ADVICE round 9).  A caller
-    passing scratch_dir owns that directory -- nothing is tracked."""
-    import os
-
-    from graphdb_cia_factbook_spark import session as sess
+def test_blocked_topk_scratch_tracked_and_cleared(spark, emb, tmp_path,
+                                                  monkeypatch):
+    """The blocked kernel's phase-1 parquet spill must not leak: it
+    lands below Spark's local dir (the first ``SPARK_LOCAL_DIRS``
+    entry), stays while its result is read, and ``clear_scratch``
+    deletes it (ADVICE round 9)."""
     from graphdb_cia_factbook_spark.operators.similarity import (
         brute_topk_arrow_blocked)
+    from graphdb_cia_factbook_spark.session import clear_scratch
+    monkeypatch.setenv("SPARK_LOCAL_DIRS", f"{tmp_path},/nonexistent")
     queries = emb.where(F.col("vec_id") < 8)
-    before = list(sess._TRACKED_SCRATCH_DIRS)
     out = brute_topk_arrow_blocked(emb, queries, k=2, dim=64,
                                    block_rows=3)
-    new = [d for d in sess._TRACKED_SCRATCH_DIRS if d not in before]
-    assert len(new) == 1 and os.path.isdir(new[0])
+    spills = list(tmp_path.iterdir())
+    assert [p.name[:12] for p in spills] == ["topk_blocks_"]
+    assert spills[0].is_dir()
     assert out.count() > 0          # consumer done before the clear
-    sess.clear_scratch(spark)
-    assert not os.path.exists(new[0])
-    assert not sess._TRACKED_SCRATCH_DIRS
+    assert spills[0].is_dir()
+    clear_scratch(spark)
+    assert not spills[0].exists()
 
 
 def test_counted_scores_sliced_equals_single_pass(spark, docs):

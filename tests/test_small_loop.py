@@ -8,8 +8,9 @@ changed after a loop -- on return or on an exception -- or write a
 conf outside the one scoped mechanism, (b) leak the loop diet's
 shuffle width into the rest of a query, (c) narrow the MinHash
 signature aggregate below the scan's width (a shuffle before it that
-AQE coalesces to one task), or (d) recompile generated classes on
-every pass (a compiled-class cache smaller than a pass)."""
+AQE coalesces to one task), (d) recompile generated classes on
+every pass (a compiled-class cache smaller than a pass), or (e) release
+query state outside the build-scope code in ``session``."""
 
 from __future__ import annotations
 
@@ -130,25 +131,41 @@ def test_boruvka_on_edge_free_graph_returns_empty_forest(spark):
     clear_scratch(spark)
 
 
-def test_conf_writes_only_in_scoped_conf_and_entry_hygiene():
-    """One mechanism for session confs: the engine writes a conf only
-    in ``session.scoped_conf`` (restored on exit) and in
-    ``registry._prepare_session`` (per-entry hygiene)."""
-    writes = re.compile(r"conf\.(un)?set\(")
+def _engine_callers(pattern: str) -> set[tuple[str, str]]:
+    """(module, innermost function) of every engine line that matches
+    ``pattern``."""
     found = set()
     for path in sorted(ENGINE.rglob("*.py")):
         src = path.read_text()
         funcs = [n for n in ast.walk(ast.parse(src))
                  if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))]
         for lineno, line in enumerate(src.splitlines(), 1):
-            if writes.search(line):
+            if re.search(pattern, line):
                 owner = min((f for f in funcs
                              if f.lineno <= lineno <= f.end_lineno),
                             key=lambda f: f.end_lineno - f.lineno,
                             default=None)
                 found.add((path.stem, owner.name if owner else "<module>"))
-    assert found == {("session", "scoped_conf"),
-                     ("registry", "_prepare_session")}
+    return found
+
+
+def test_conf_writes_only_in_scoped_conf_and_entry_hygiene():
+    """One mechanism for session confs: the engine writes a conf only
+    in ``session.scoped_conf`` (restored on exit) and in
+    ``registry._prepare_session`` (per-entry hygiene)."""
+    assert _engine_callers(r"conf\.(un)?set\(") == {
+        ("session", "scoped_conf"), ("registry", "_prepare_session")}
+
+
+def test_only_the_scope_code_releases_state():
+    """One lifetime mechanism: only the scope code in ``session`` reads
+    the persistent-RDD set or unpersists; nothing clears the catalog
+    cache; no engine file names the checkout's own path."""
+    assert _engine_callers(r"getPersistentRDDs|\.unpersist\(") <= {
+        ("session", "_persistent_rdds"), ("session", "_unpersist"),
+        ("session", "_release")}
+    assert not _engine_callers(r"clearCache\(")
+    assert not _engine_callers(re.escape(ENGINE.parent.as_posix()))
 
 
 def test_minhash_signature_reads_the_scan_width(spark, monkeypatch):
