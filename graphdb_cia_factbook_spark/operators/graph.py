@@ -28,6 +28,12 @@ Scale design (the part GDS does in closed-source memory):
   AQE off, a narrow shuffle width and explicit broadcasts for the loop
   only.  The caller's session confs come back when the block exits,
   also when the loop raises.
+- The BFS family (:func:`bfs_hops`, the multi-root closures under
+  closeness, diameter and betweenness, :func:`bridges`) runs through
+  one frontier driver, :func:`_frontier_bfs`: the caller supplies the
+  hop-0 frontier, its BFS keys, a message step and its gate bound; the
+  driver owns the anti-join against the visited pairs, the per-level
+  checkpoint, the small-loop diet and the hop-budget probe.
 - Per-iteration lineage grows unboundedly; we ``localCheckpoint`` every
   ``checkpoint_every`` supersteps to truncate it, and those are the
   ONLY driver actions in the loop -- the dangling-mass total is folded
@@ -62,14 +68,15 @@ def _warn_hop_budget(fn_name: str, max_hops: int) -> None:
     """A BFS-family loop ran out of hop budget with a LIVE frontier:
     the closure is truncated, and downstream consumers (bridges,
     betweenness, diameter) would silently treat unreached vertices as
-    unreachable (ADVICE round 3).  All call sites iterate to frontier
-    exhaustion in the normal case -- the budget is a runaway backstop
-    -- so hitting it is always worth a loud signal."""
+    unreachable (ADVICE round 3).  :func:`_frontier_bfs`, its only
+    caller, iterates to frontier exhaustion in the normal case -- the
+    budget is a runaway backstop -- so hitting it is always worth a
+    loud signal, reported at the line that called the BFS operator."""
     warnings.warn(
         f"{fn_name}: hop budget {max_hops} exhausted with a non-empty "
         f"frontier; vertices beyond {max_hops} hops are missing from "
         "the result. Raise max_hops (the loop stops by itself at "
-        "frontier exhaustion).", RuntimeWarning, stacklevel=3)
+        "frontier exhaustion).", RuntimeWarning, stacklevel=4)
 
 
 @dataclass
@@ -548,6 +555,19 @@ def _rank_loop(verts: DataFrame, edges_share: DataFrame,
     return ranks.withColumnRenamed("rank", out_name)
 
 
+def _share_edges(graph: Graph, weighted: bool) -> DataFrame:
+    """(src, dst, share) for the rank loop: each edge's fraction of its
+    source's total out-weight -- ``amount`` when ``weighted`` and the
+    edges carry it, else 1.0 per edge."""
+    weight = (F.col("amount") if weighted and "amount" in graph.edges.columns
+              else F.lit(1.0))
+    edges = graph.edges.select("src", "dst", weight.cast("double").alias("w"))
+    out_w = edges.groupBy("src").agg(F.sum("w").alias("out_w"))
+    return (edges.join(out_w, "src")
+            .select("src", "dst",
+                    (F.col("w") / F.col("out_w")).alias("share")))
+
+
 def pagerank(graph: Graph, damping: float = 0.85, max_iter: int = 20,
              weighted: bool = False, checkpoint_every: int = 5) -> DataFrame:
     """G1: PageRank as iterative DataFrame supersteps.
@@ -559,13 +579,7 @@ def pagerank(graph: Graph, damping: float = 0.85, max_iter: int = 20,
     default matches; ``weighted=True`` exposes the variant the
     reference author probably intended.
     """
-    weight = (F.col("amount") if weighted and "amount" in graph.edges.columns
-              else F.lit(1.0))
-    edges = graph.edges.select("src", "dst", weight.cast("double").alias("w"))
-    out_w = edges.groupBy("src").agg(F.sum("w").alias("out_w"))
-    edges_share = (edges.join(out_w, "src")
-                   .select("src", "dst",
-                           (F.col("w") / F.col("out_w")).alias("share")))
+    edges_share = _share_edges(graph, weighted)
     return _rank_loop(graph.vertices.select("id"), edges_share, damping,
                       max_iter, checkpoint_every, "pagerank")
 
@@ -600,16 +614,8 @@ def personalized_pagerank(graph: Graph, sources: list,
         "id", F.when(F.col("id").isin(sources),
                      F.lit(1.0 / len(sources)))
         .otherwise(F.lit(0.0)).alias("tele"))
-
-    weight = (F.col("amount") if weighted and "amount" in graph.edges.columns
-              else F.lit(1.0))
-    edges = graph.edges.select("src", "dst", weight.cast("double").alias("w"))
-    out_w = edges.groupBy("src").agg(F.sum("w").alias("out_w"))
-    edges_share = (edges.join(out_w, "src")
-                   .select("src", "dst",
-                           (F.col("w") / F.col("out_w")).alias("share")))
-    return _rank_loop(verts, edges_share, damping, max_iter,
-                      checkpoint_every, "ppr", teleport=tele)
+    return _rank_loop(verts, _share_edges(graph, weighted), damping,
+                      max_iter, checkpoint_every, "ppr", teleport=tele)
 
 
 def articlerank(graph: Graph, damping: float = 0.85, max_iter: int = 20,
@@ -815,110 +821,135 @@ def strongly_connected_components(graph: Graph, max_pivots: int = 50,
                       F.count(F.lit(1)).over(w).alias("scc_size"))
 
 
-def bfs_hops(graph: Graph, sources: list, max_hops: int = 20,
-             directed: bool = True) -> DataFrame:
-    """Minimum hop count from any source vertex (unweighted BFS).
-
-    Frontier expansion: each superstep joins the CURRENT frontier
-    (only newly-discovered vertices, not the full visited set) against
-    the edge table, anti-joins out already-visited vertices, and
-    checkpoints the (visited, frontier) pair.  Work per superstep is
-    frontier-out-degree-sized -- the scalable BFS shape; unreached
-    vertices get NULL."""
+def _bfs_edges(graph: Graph, directed: bool) -> DataFrame:
+    """The stationary (src, dst) table a BFS expands over: distinct
+    pairs, both directions unless ``directed``, held once."""
     edges = graph.edges.select("src", "dst")
     if not directed:
         edges = edges.union(graph.edges.select(
             F.col("dst").alias("src"), F.col("src").alias("dst")))
-    edges = edges.distinct().localCheckpoint()
+    return edges.distinct().localCheckpoint()
 
-    frontier = (graph.vertices.select("id")
-                .where(F.col("id").isin(sources))
-                .withColumn("dist", F.lit(0)).localCheckpoint())
+
+def _frontier_bfs(name: str, frontier: DataFrame, keys: list, step,
+                  small: bool, stationary: DataFrame,
+                  max_hops: int) -> DataFrame:
+    """The level-synchronous BFS superstep loop of the BFS family
+    (:func:`bfs_hops`, :func:`_multi_root_bfs`, :func:`bridges`): one
+    dataflow plan per superstep with a per-program message step, as
+    Pregelix runs a vertex program.
+
+    ``frontier`` holds the hop-0 rows, ``(*keys, id, ...)``: one BFS
+    per distinct ``keys`` value (a root, an excluded edge) expands in
+    the SAME supersteps.  Each hop ``step(hinted_frontier, hop)``
+    expands the frontier over the caller's edges into next-level rows
+    of the frontier's columns, one per ``(*keys, id)``; the driver
+    anti-joins them against the visited pairs, checkpoints the level
+    lazily and stops at the first empty one.  Work per superstep is
+    frontier-sized.  Returns the visited union (hop-0 rows included).
+
+    The whole loop runs under ``_small_loop_mode(small, stationary)``:
+    the caller sizes the gate (its state bound) and counts it.  One
+    probe level past ``max_hops`` warns only if the live frontier would
+    STILL discover vertices (a bare for/else false-positived when a BFS
+    completed at exactly ``max_hops``).
+
+    Loop-shape invariant: no checkpoint on the visited union.  Every
+    leaf (a level) is already a materialized checkpoint, so the union
+    is plan glue; checkpointing it copied the ENTIRE closure once per
+    hop (O(hops^2) bytes at any scale).  The union grows one plan leg
+    per hop, linear and bounded by ``max_hops``.  The companion
+    invariant is in :func:`_small_loop_mode`: AQE goes off only while
+    these stats-less frontier joins carry explicit broadcasts."""
     visited = frontier
-
-    # small-loop gate: frontier/visited bounded by the vertex count
-    # here (single shared frontier) -- see _small_loop_mode
-    small = graph.vertices.count() <= 10_000_000
-    with _small_loop_mode(edges.sparkSession, small, edges) as _b:
-        # one extra probe round past the budget: warn only if the live
-        # frontier would STILL discover vertices (ADVICE r4 -- the bare
-        # for/else false-positived when BFS completed at exactly max_hops)
+    with _small_loop_mode(stationary.sparkSession, small, stationary) as _b:
         for hop in range(1, max_hops + 2):
-            nxt = (edges.join(_b(frontier), edges.src == frontier.id)
-                   .select(F.col("dst").alias("id"))
-                   .distinct()
-                   .join(_b(visited.select("id")), "id", "left_anti")
-                   .withColumn("dist", F.lit(hop))
+            nxt = (step(_b(frontier), hop)
+                   .join(_b(visited.select(*keys, "id")), [*keys, "id"],
+                         "left_anti")
                    .localCheckpoint(eager=False))
             if nxt.isEmpty():
                 break
             if hop > max_hops:
-                _warn_hop_budget("bfs_hops", max_hops)
+                _warn_hop_budget(name, max_hops)
                 break
-            # LOOP-SHAPE INVARIANT (round 11, do not undo): no checkpoint
-            # on the union -- every leaf (the per-hop nxt) is already a
-            # materialized checkpoint, so the union is pure plan glue;
-            # re-checkpointing it copied the ENTIRE closure once per hop
-            # (O(hops^2) bytes at any scale).  The union DOES accrete one
-            # plan leg per hop, but that growth is linear and bounded by
-            # max_hops (~20-30), far below analyzer-pain territory.  The
-            # same invariant holds at every visited-union site below
-            # (_multi_root_bfs, _multi_root_bfs_paths, bridges).  See also
-            # _small_loop_mode's docstring for the companion invariant:
-            # AQE goes off only while these stats-less frontier joins
-            # carry explicit broadcasts.
             visited = visited.union(nxt)
             frontier = nxt
+    return visited
+
+
+def bfs_hops(graph: Graph, sources: list, max_hops: int = 20,
+             directed: bool = True) -> DataFrame:
+    """Minimum hop count from any source vertex (unweighted BFS).
+
+    Frontier expansion (:func:`_frontier_bfs`): each superstep joins
+    the CURRENT frontier (only newly-discovered vertices, not the full
+    visited set) against the edge table and anti-joins out
+    already-visited vertices.  Work per superstep is
+    frontier-out-degree-sized -- the scalable BFS shape; unreached
+    vertices get NULL."""
+    edges = _bfs_edges(graph, directed)
+    frontier = (graph.vertices.select("id")
+                .where(F.col("id").isin(sources))
+                .withColumn("dist", F.lit(0)).localCheckpoint())
+
+    def step(f: DataFrame, hop: int) -> DataFrame:
+        return (edges.join(f, edges.src == f.id)
+                .select(F.col("dst").alias("id"))
+                .distinct()
+                .withColumn("dist", F.lit(hop)))
+
+    # small-loop gate: one shared frontier, bounded by the vertex count
+    small = graph.vertices.count() <= 10_000_000
+    visited = _frontier_bfs("bfs_hops", frontier, [], step, small, edges,
+                            max_hops)
     return (graph.vertices.select("id")
             .join(visited, "id", "left")
             .select("id", "dist"))
 
 
 def _multi_root_bfs(graph: Graph, sources: list | None = None,
-                    max_hops: int = 30,
-                    directed: bool = True) -> DataFrame:
+                    max_hops: int = 30, directed: bool = True,
+                    paths: bool = False) -> DataFrame:
     """Shared-frontier BFS from every root at once: returns the
     shortest-path closure (root, id, dist) including the dist-0 self
     rows.  All roots expand in the SAME supersteps (|diameter| rounds,
-    each one frontier join + anti-join) -- the kernel under
-    :func:`closeness_centrality` and :func:`graph_diameter`."""
-    edges = graph.edges.select("src", "dst")
-    if not directed:
-        edges = edges.union(graph.edges.select(
-            F.col("dst").alias("src"), F.col("src").alias("dst")))
-    edges = edges.distinct().localCheckpoint()
+    each one frontier join + anti-join, :func:`_frontier_bfs`) -- the
+    kernel under :func:`closeness_centrality` and
+    :func:`graph_diameter`.
 
+    ``paths`` also counts shortest paths: the closure gains ``npaths``,
+    the number of distinct shortest root->id paths (sigma in Brandes'
+    notation, for :func:`betweenness_centrality`).  The superstep
+    shape is the same because BFS path counting is level-synchronous:
+    the count of a vertex first reached at hop d is the sum of the
+    counts of its hop-(d-1) predecessors, which is exactly the
+    frontier aggregate."""
+    edges = _bfs_edges(graph, directed)
     roots = graph.vertices.select("id")
     if sources is not None:
         roots = roots.where(F.col("id").isin(sources))
+    npaths = [F.lit(1).cast("long").alias("npaths")] if paths else []
+    frontier = (roots.select(F.col("id").alias("root"), "id",
+                             F.lit(0).alias("dist"), *npaths)
+                .localCheckpoint())
 
-    frontier = (roots.select(F.col("id").alias("root"), "id")
-                .withColumn("dist", F.lit(0)).localCheckpoint())
-    visited = frontier
+    def step(f: DataFrame, hop: int) -> DataFrame:
+        out = edges.join(f, edges.src == f.id)
+        if paths:
+            return (out.groupBy("root", F.col("dst").alias("id"))
+                    .agg(F.sum("npaths").alias("npaths"))
+                    .select("root", "id", F.lit(hop).alias("dist"),
+                            "npaths"))
+        return (out.select("root", F.col("dst").alias("id"))
+                .distinct()
+                .withColumn("dist", F.lit(hop)))
 
-    # small-loop gate: see _small_loop_mode / _multi_root_bfs_paths
+    # small-loop gate: frontier/visited are bounded by the CLOSURE size
+    # (roots x vertices)
     small = frontier.count() * graph.vertices.count() <= 10_000_000
-    with _small_loop_mode(edges.sparkSession, small, edges) as _b:
-        for hop in range(1, max_hops + 2):
-            nxt = (edges.join(_b(frontier), edges.src == frontier.id)
-                   .select("root", F.col("dst").alias("id"))
-                   .distinct()
-                   .join(_b(visited.select("root", "id")), ["root", "id"],
-                         "left_anti")
-                   .withColumn("dist", F.lit(hop))
-                   .localCheckpoint(eager=False))
-            if nxt.isEmpty():
-                break
-            if hop > max_hops:
-                _warn_hop_budget("_multi_root_bfs", max_hops)
-                break
-            # no checkpoint on the union: every leaf (the per-hop nxt) is
-            # already a materialized checkpoint, so the union is pure plan
-            # glue -- re-checkpointing it copied the ENTIRE closure once
-            # per hop (O(hops^2) bytes at any scale)
-            visited = visited.union(nxt)
-            frontier = nxt
-    return visited
+    return _frontier_bfs("_multi_root_bfs", frontier, ["root"], step, small,
+                         edges, max_hops)
 
 
 def closeness_centrality(graph: Graph, sources: list | None = None,
@@ -1447,62 +1478,6 @@ def neighborhood_agg(graph: Graph, feature_cols: list,
                     *[F.coalesce(F.col(f"nbr_mean_{c}"), F.lit(0.0))
                       .alias(f"nbr_mean_{c}") for c in feature_cols]))
 
-def _multi_root_bfs_paths(graph: Graph, sources: list | None = None,
-                          max_hops: int = 30,
-                          directed: bool = True) -> DataFrame:
-    """Shared-frontier BFS that ALSO counts shortest paths: returns the
-    closure (root, id, dist, npaths) where ``npaths`` is the number of
-    distinct shortest src->dst paths (sigma in Brandes' notation).
-
-    Same superstep shape as :func:`_multi_root_bfs` -- |diameter|
-    rounds, each one frontier join + per-(root, dst) count aggregate +
-    anti-join -- because BFS path counting is level-synchronous: the
-    shortest-path count of a vertex first reached at hop d is the sum
-    of the counts of its hop-(d-1) predecessors, which is exactly the
-    frontier aggregate."""
-    edges = graph.edges.select("src", "dst")
-    if not directed:
-        edges = edges.union(graph.edges.select(
-            F.col("dst").alias("src"), F.col("src").alias("dst")))
-    edges = edges.distinct().localCheckpoint()
-
-    roots = graph.vertices.select("id")
-    if sources is not None:
-        roots = roots.where(F.col("id").isin(sources))
-
-    frontier = (roots.select(F.col("id").alias("root"), "id",
-                             F.lit(0).alias("dist"),
-                             F.lit(1).cast("long").alias("npaths"))
-                .localCheckpoint())
-    visited = frontier
-    # small-loop gate: frontier/visited are bounded by the CLOSURE
-    # size (roots x vertices); below ~10M rows every loop join has a
-    # broadcastable side and the diet applies (_small_loop_mode)
-    small = frontier.count() * graph.vertices.count() <= 10_000_000
-    with _small_loop_mode(edges.sparkSession, small, edges) as _b:
-        for hop in range(1, max_hops + 2):
-            nxt = (edges.join(_b(frontier), edges.src == frontier.id)
-                   .groupBy("root", F.col("dst").alias("nid"))
-                   .agg(F.sum("npaths").alias("npaths"))
-                   .withColumnRenamed("nid", "id")
-                   .join(_b(visited.select("root", "id")), ["root", "id"],
-                         "left_anti")
-                   .withColumn("dist", F.lit(hop))
-                   .select("root", "id", "dist", "npaths")
-                   .localCheckpoint(eager=False))
-            if nxt.isEmpty():
-                break
-            if hop > max_hops:
-                _warn_hop_budget("_multi_root_bfs_paths", max_hops)
-                break
-            # no checkpoint on the union: every leaf (the per-hop nxt) is
-            # already a materialized checkpoint, so the union is pure plan
-            # glue -- re-checkpointing it copied the ENTIRE closure once
-            # per hop (O(hops^2) bytes at any scale)
-            visited = visited.union(nxt)
-            frontier = nxt
-    return visited
-
 
 def betweenness_centrality(graph: Graph, max_hops: int = 30,
                            directed: bool = True) -> DataFrame:
@@ -1514,8 +1489,8 @@ def betweenness_centrality(graph: Graph, max_hops: int = 30,
     sigma(s, v) * sigma(v, t) / sigma(s, t)`` restricted to pairs where
     ``dist(s, v) + dist(v, t) = dist(s, t)`` (i.e. v lies on a shortest
     s->t path).  All three sigma factors come from ONE multi-root BFS
-    closure (:func:`_multi_root_bfs_paths`); the restriction is the
-    equi-join condition on distances.
+    closure (:func:`_multi_root_bfs` with ``paths``); the restriction
+    is the equi-join condition on distances.
 
     Determinism: sigma values are exact integers, the per-triple ratio
     is one IEEE double division, and the per-vertex sum goes through
@@ -1529,7 +1504,7 @@ def betweenness_centrality(graph: Graph, max_hops: int = 30,
     unchanged.  Sibling of the GDS centrality family the reference's
     stack exposes next to pageRank
     (/root/reference/preprocess_upload_neo4j.py:400-447)."""
-    closure = _multi_root_bfs_paths(graph, None, max_hops, directed)
+    closure = _multi_root_bfs(graph, None, max_hops, directed, paths=True)
     closure = closure.localCheckpoint()  # three consumers below
     sv = (closure.where(F.col("dist") > 0)
           .select(F.col("root").alias("s"), F.col("id").alias("v"),
@@ -2157,8 +2132,8 @@ def edge_betweenness(graph: Graph, max_hops: int = 30,
     1), as the definition requires.  Same determinism contract
     (decimal-exact ratio sums, round 8) and the same landmark-sample
     posture at web scale."""
-    closure = _multi_root_bfs_paths(graph, None, max_hops, directed) \
-        .localCheckpoint()
+    closure = _multi_root_bfs(graph, None, max_hops, directed,
+                              paths=True).localCheckpoint()
     su = closure.select(F.col("root").alias("s"), F.col("id").alias("u"),
                         F.col("dist").alias("d1"),
                         F.col("npaths").alias("p1"))
@@ -2204,34 +2179,23 @@ def bridges(graph: Graph, max_hops: int = 30) -> DataFrame:
     sym = sym.localCheckpoint()
     # frontier per excluded edge starts at its own a-endpoint
     frontier = eid.select("ea", "eb", F.col("ea").alias("id"))
-    visited = frontier
+
+    def step(f: DataFrame, hop: int) -> DataFrame:
+        return (f.join(sym, f.id == sym.a)
+                # drop the excluded edge in both directions
+                .where(~((F.col("id") == F.col("ea"))
+                         & (F.col("b") == F.col("eb")))
+                       & ~((F.col("id") == F.col("eb"))
+                           & (F.col("b") == F.col("ea"))))
+                .select("ea", "eb", F.col("b").alias("id"))
+                .distinct())
+
     # small-loop gate: per-excluded-edge BFS state is bounded by
-    # |E| x |V| -- see _small_loop_mode
+    # |E| x |V|; a truncated BFS would mark far-apart endpoints as
+    # bridges, hence the driver's hop-budget warning
     small = ue.count() * graph.vertices.count() <= 10_000_000
-    with _small_loop_mode(sym.sparkSession, small, sym) as _b:
-        for hop in range(1, max_hops + 2):
-            nxt = (_b(frontier).join(sym, frontier.id == sym.a)
-                   # drop the excluded edge in both directions
-                   .where(~((F.col("id") == F.col("ea"))
-                            & (F.col("b") == F.col("eb")))
-                          & ~((F.col("id") == F.col("eb"))
-                              & (F.col("b") == F.col("ea"))))
-                   .select("ea", "eb", F.col("b").alias("id"))
-                   .distinct()
-                   .join(_b(visited), ["ea", "eb", "id"], "left_anti")
-                   .localCheckpoint(eager=False))
-            if nxt.isEmpty():
-                break
-            if hop > max_hops:
-                # truncation here would mark far-apart endpoints as bridges
-                _warn_hop_budget("bridges", max_hops)
-                break
-            # no checkpoint on the union: every leaf (the per-hop nxt) is
-            # already a materialized checkpoint, so the union is pure plan
-            # glue -- re-checkpointing it copied the ENTIRE closure once
-            # per hop (O(hops^2) bytes at any scale)
-            visited = visited.union(nxt)
-            frontier = nxt
+    visited = _frontier_bfs("bridges", frontier, ["ea", "eb"], step, small,
+                            sym, max_hops)
     reached = (visited.where(F.col("id") == F.col("eb"))
                .select("ea", "eb", F.lit(True).alias("__r")))
     return (ue.join(reached, (ue.a == reached.ea) & (ue.b == reached.eb),

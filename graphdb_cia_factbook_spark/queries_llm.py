@@ -165,12 +165,6 @@ def _dot_sql_unrolled(a: str, b: str, dim: int = _EMBED_DIM) -> str:
         for i in range(1, dim + 1)) + ")"
 
 
-def _cos_sql_unrolled(a: str, b: str, dim: int = _EMBED_DIM) -> str:
-    return (f"({_dot_sql_unrolled(a, b, dim)} / "
-            f"sqrt({_dot_sql_unrolled(a, a, dim)} * "
-            f"{_dot_sql_unrolled(b, b, dim)}))")
-
-
 def _bucket_sql(vec: str, nbits: int) -> str:
     return " || ".join(
         f"(CASE WHEN {vec}[{i + 1}] >= 0 THEN '1' ELSE '0' END)"

@@ -71,7 +71,7 @@ def test_ann_brute_broadcasts_queries(spark, queries):
     assert "BroadcastNestedLoopJoin" in plan
 
 
-def test_no_python_row_udfs_in_catalyst_paths(spark, queries):
+def test_no_python_row_udfs_in_catalyst_paths(queries, registry_builds):
     """Everything except the explicitly-Arrow multimodal path must stay
     JVM-side: no BatchEvalPython (row-at-a-time Python) anywhere,
     mapInPandas only in the mm_* queries, and mapInArrow only in the
@@ -89,10 +89,10 @@ def test_no_python_row_udfs_in_catalyst_paths(spark, queries):
                       "g2_articlerank", "g_ppr", "g_connected_components",
                       "llm_dedup_clusters", "llm_dedup_keep_best",
                       "er_golden_record"}
-    for name, fn in queries.items():
+    for name in queries:
         if name in eager:
             continue
-        plan = plan_of(fn(spark, SF), "simple")
+        plan = registry_builds(name)[0]
         assert "BatchEvalPython" not in plan, name
         # the Arrow whitelist: multimodal decode (mm_*) and the dense
         # exact-scoring kernels (similarity.brute_topk_arrow for

@@ -693,3 +693,108 @@ def test_equidepth_bucketed_rank_equals_ntile(spark):
         got = {(r["id"], r["b"]) for r in
                ranked.select("id", bucket.alias("b")).collect()}
         assert got == want, f"n={n}"
+
+
+LONG_ID = st.integers(-(2 ** 63), 2 ** 63 - 1)
+
+
+@st.composite
+def digraphs(draw):
+    """(vertex ids, edges, BFS sources): long ids on both sides of the
+    int range, random edges over the connected ids plus at least one
+    duplicate edge and the drawn self-loops, and isolated vertices that
+    no edge touches."""
+    ids = draw(st.lists(LONG_ID, min_size=1, max_size=7, unique=True))
+    isolated = draw(st.lists(LONG_ID.filter(lambda i: i not in ids),
+                             max_size=2, unique=True))
+    edges = draw(st.lists(st.tuples(st.sampled_from(ids),
+                                    st.sampled_from(ids)), max_size=12))
+    loops = draw(st.lists(st.sampled_from(ids), max_size=2))
+    edges = edges + edges[:1] + [(v, v) for v in loops]
+    sources = draw(st.lists(st.sampled_from(ids + isolated), min_size=1,
+                            max_size=3, unique=True))
+    return ids + isolated, edges, sources
+
+
+def _nx_and_spark(spark, verts, edges):
+    import networkx as nx
+
+    from graphdb_cia_factbook_spark.operators.graph import Graph
+    g = nx.DiGraph()
+    g.add_nodes_from(verts)
+    g.add_edges_from(edges)
+    sg = Graph(spark.createDataFrame([(v,) for v in verts], "id bigint"),
+               spark.createDataFrame(edges, "src bigint, dst bigint"))
+    return g, sg
+
+
+BFS_SETTINGS = dict(SETTINGS, max_examples=4)
+
+
+@given(graph=digraphs())
+@settings(**BFS_SETTINGS)
+def test_bfs_hops_matches_networkx(spark, graph):
+    """Hop counts from a source set, directed and undirected, are the
+    per-target minimum of the single-source BFS distances; unreached
+    vertices get NULL."""
+    import networkx as nx
+
+    from graphdb_cia_factbook_spark.operators.graph import bfs_hops
+    from graphdb_cia_factbook_spark.session import clear_scratch
+    verts, edges, sources = graph
+    dg, sg = _nx_and_spark(spark, verts, edges)
+    for directed, g in ((True, dg), (False, dg.to_undirected())):
+        want = {v: None for v in verts}
+        for s in sources:
+            for v, d in nx.single_source_shortest_path_length(g, s).items():
+                want[v] = d if want[v] is None else min(want[v], d)
+        got = {r.id: r.dist
+               for r in bfs_hops(sg, sources, directed=directed).collect()}
+        clear_scratch(spark)
+        assert got == want, directed
+
+
+@given(graph=digraphs(), directed=st.booleans())
+@settings(**BFS_SETTINGS)
+def test_multi_root_bfs_matches_networkx(spark, graph, directed):
+    """The all-roots closure holds exactly the reachable (root, id)
+    pairs at their BFS distance; with ``paths`` each pair also counts
+    its distinct shortest paths."""
+    import networkx as nx
+
+    from graphdb_cia_factbook_spark.operators.graph import _multi_root_bfs
+    from graphdb_cia_factbook_spark.session import clear_scratch
+    verts, edges, _ = graph
+    g, sg = _nx_and_spark(spark, verts, edges)
+    if not directed:
+        g = g.to_undirected()
+    want = {(s, t): d for s, dists in nx.all_pairs_shortest_path_length(g)
+            for t, d in dists.items()}
+    got = {(r.root, r.id): r.dist for r in
+           _multi_root_bfs(sg, directed=directed).collect()}
+    assert got == want
+    rows = _multi_root_bfs(sg, directed=directed, paths=True).collect()
+    clear_scratch(spark)
+    assert {(r.root, r.id): r.dist for r in rows} == want
+    for r in rows:
+        assert r.npaths == len(list(nx.all_shortest_paths(g, r.root, r.id)))
+
+
+@given(graph=digraphs())
+@settings(**BFS_SETTINGS)
+def test_bridges_match_networkx(spark, graph):
+    """One row per undirected non-loop edge, flagged exactly when
+    networkx calls it a bridge."""
+    import networkx as nx
+
+    from graphdb_cia_factbook_spark.operators.graph import bridges
+    from graphdb_cia_factbook_spark.session import clear_scratch
+    verts, edges, _ = graph
+    g, sg = _nx_and_spark(spark, verts, edges)
+    ug = g.to_undirected()
+    ug.remove_edges_from(list(nx.selfloop_edges(ug)))
+    got = {(r.a, r.b): r.is_bridge for r in bridges(sg).collect()}
+    clear_scratch(spark)
+    want_bridges = {(min(e), max(e)) for e in nx.bridges(ug)}
+    assert got == {(min(e), max(e)): (min(e), max(e)) in want_bridges
+                   for e in ug.edges()}

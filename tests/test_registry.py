@@ -41,7 +41,7 @@ def test_every_query_has_a_docstring():
     assert not bad, bad
 
 
-def test_no_top_level_array_or_map_outputs(spark):
+def test_no_top_level_array_or_map_outputs(registry_builds):
     """The driver's correctness checker canonicalizes results with
     pandas ``sort_values`` over every column and crashes on unhashable
     cells -- round 7's only scoreboard red (``llm_quantile_normalize``
@@ -55,14 +55,12 @@ def test_no_top_level_array_or_map_outputs(spark):
     oracle rows (a DuckDB hash compare cannot even run on an
     array column without the canonicalizer the driver lacks)."""
     from pyspark.sql.types import ArrayType, MapType
-    sf = "/root/testdata/sf0.001"
     eager = {"llm_minhash_lsh", "llm_ngram_jaccard"}
     bad = []
-    for name, fn in registry.queries().items():
+    for name in registry.queries():
         if name in eager:
             continue
-        df = fn(spark, sf)
-        for f in df.schema.fields:
+        for f in registry_builds(name)[1].fields:
             if isinstance(f.dataType, (ArrayType, MapType)):
                 bad.append((name, f.name, f.dataType.simpleString()))
     assert not bad, bad
@@ -73,8 +71,9 @@ def test_bench_headline_names_are_registered():
     a rename or removal must fail fast here, not in the driver's
     bench run."""
     import importlib.util
+    from pathlib import Path
     spec = importlib.util.spec_from_file_location(
-        "bench", "/root/repo/bench.py")
+        "bench", Path(__file__).resolve().parents[1] / "bench.py")
     bench = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(bench)
     from graphdb_cia_factbook_spark import registry

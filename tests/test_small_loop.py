@@ -157,15 +157,35 @@ def test_conf_writes_only_in_scoped_conf_and_entry_hygiene():
         ("session", "scoped_conf"), ("registry", "_prepare_session")}
 
 
+def test_bfs_family_runs_through_one_driver():
+    """One superstep loop for the BFS family: the hop-budget warning
+    and the small-loop diet of ``bfs_hops``, the multi-root closures
+    and ``bridges`` live only in ``graph._frontier_bfs``."""
+    assert _engine_callers(r"_warn_hop_budget\(") == {
+        ("graph", "_warn_hop_budget"), ("graph", "_frontier_bfs")}
+    family = {("graph", f) for f in ("bfs_hops", "_multi_root_bfs", "step",
+                                     "bridges")}
+    assert not _engine_callers(r"_small_loop_mode\(") & family
+
+
 def test_only_the_scope_code_releases_state():
     """One lifetime mechanism: only the scope code in ``session`` reads
     the persistent-RDD set or unpersists; nothing clears the catalog
-    cache; no engine file names the checkout's own path."""
+    cache; no engine file names the checkout's own path, and no test or
+    tool puts a literal absolute path on ``sys.path`` (each derives
+    its checkout from ``__file__``, so it imports its own engine)."""
     assert _engine_callers(r"getPersistentRDDs|\.unpersist\(") <= {
         ("session", "_persistent_rdds"), ("session", "_unpersist"),
         ("session", "_release")}
     assert not _engine_callers(r"clearCache\(")
     assert not _engine_callers(re.escape(ENGINE.parent.as_posix()))
+    literal = re.compile(r"sys\.path\.insert\(\s*\d+\s*,\s*[rRbBuU]?['\"]/")
+    pinned = [f"{path.name}:{n}"
+              for sub in ("tests", "tools")
+              for path in sorted((ENGINE.parent / sub).glob("*.py"))
+              for n, line in enumerate(path.read_text().splitlines(), 1)
+              if literal.search(line)]
+    assert not pinned, pinned
 
 
 def test_minhash_signature_reads_the_scan_width(spark, monkeypatch):

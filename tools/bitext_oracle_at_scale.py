@@ -27,11 +27,12 @@ Usage: python tools/bitext_oracle_at_scale.py [sf_dir] [chunk]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import duckdb  # noqa: E402
 

@@ -1,7 +1,8 @@
 """Simulate the driver: vanilla SparkSession -> entry() smoke +
 queries()/oracle_sql() contract checks (schema stability, ≥0 rows)."""
+import os
 import sys, time
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession
 

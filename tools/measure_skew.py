@@ -13,9 +13,10 @@ Usage: python tools/measure_skew.py [sf_dir] [n_partitions]
 from __future__ import annotations
 
 import statistics
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 

@@ -25,11 +25,12 @@ Usage: python tools/nbits_receipt.py [sf_dir] [nbits_prod] [passes]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 import warnings
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> int:

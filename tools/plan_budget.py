@@ -46,7 +46,7 @@ import json
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 BUDGET_PATH = os.path.join(os.path.dirname(os.path.dirname(
     os.path.abspath(__file__))), "PLAN_BUDGET.json")

@@ -17,10 +17,11 @@ Usage: python tools/scale_run.py [query ...] [--passes=N]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 DEFAULT_QUERIES = ["q9_product_profit", "llm_curation_pipeline",
                    "llm_minhash_lsh", "llm_ann_ivf", "g1_pagerank"]

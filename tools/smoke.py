@@ -1,6 +1,7 @@
 """Dev smoke: run the flagship query at sf0.001."""
+import os
 import sys, time
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from graphdb_cia_factbook_spark.session import get_spark
 from graphdb_cia_factbook_spark.flagship import flagship
