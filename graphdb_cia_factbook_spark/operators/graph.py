@@ -34,6 +34,10 @@ Scale design (the part GDS does in closed-source memory):
   hop-0 frontier, its BFS keys, a message step and its gate bound; the
   driver owns the anti-join against the visited pairs, the per-level
   checkpoint, the small-loop diet and the hop-budget probe.
+- The fixpoint loops (connected components, SSSP, k-core, k-truss,
+  condensation, Borůvka's pointer doubling, the SCC trim) run through
+  :func:`_fixpoint`: the caller's step flags changed rows; the driver
+  owns the checkpoint, the one-job probe and the budget warning.
 - Per-iteration lineage grows unboundedly; we ``localCheckpoint`` every
   ``checkpoint_every`` supersteps to truncate it, and those are the
   ONLY driver actions in the loop -- the dangling-mass total is folded
@@ -54,6 +58,7 @@ import warnings
 from collections.abc import Iterator
 from contextlib import contextmanager
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -64,19 +69,23 @@ from ..sources import assert_unique_key, read_table
 from .relational import dsum
 
 
-def _warn_hop_budget(fn_name: str, max_hops: int) -> None:
-    """A BFS-family loop ran out of hop budget with a LIVE frontier:
-    the closure is truncated, and downstream consumers (bridges,
-    betweenness, diameter) would silently treat unreached vertices as
-    unreachable (ADVICE round 3).  :func:`_frontier_bfs`, its only
-    caller, iterates to frontier exhaustion in the normal case -- the
-    budget is a runaway backstop -- so hitting it is always worth a
-    loud signal, reported at the line that called the BFS operator."""
+_BUDGETS = {"max_hops": ("hop budget {n} exhausted with a non-empty "
+                          "frontier; vertices beyond {n} hops are missing "
+                          "from the result", "frontier exhaustion"),
+            "max_iter": ("iteration budget {n} exhausted before the "
+                         "fixpoint; the result is the state after {n} "
+                         "rounds, not the fixpoint", "the fixpoint")}
+
+
+def _warn_budget(fn_name: str, option: str, budget: int) -> None:
+    """A superstep driver (:func:`_frontier_bfs`, :func:`_fixpoint`)
+    ran out of its ``option`` budget, a runaway backstop: the result is
+    truncated and consumers would treat it as complete (ADVICE round
+    3), so warn at the line that called the graph operator."""
+    lost, stop = _BUDGETS[option]
     warnings.warn(
-        f"{fn_name}: hop budget {max_hops} exhausted with a non-empty "
-        f"frontier; vertices beyond {max_hops} hops are missing from "
-        "the result. Raise max_hops (the loop stops by itself at "
-        "frontier exhaustion).", RuntimeWarning, stacklevel=4)
+        f"{fn_name}: {lost.format(n=budget)}. Raise {option} (the loop "
+        f"stops by itself at {stop}).", RuntimeWarning, stacklevel=4)
 
 
 @dataclass
@@ -409,6 +418,29 @@ def _small_loop_mode(spark: SparkSession, small: bool,
         yield F.broadcast if small else (lambda df: df)
 
 
+def _fixpoint(name: str, state: DataFrame, step, max_iter: int,
+              n: int | None = None) -> DataFrame:
+    """The synchronous iterate-until-nothing-changes loop.  Each round
+    ``step(state)`` returns the next state plus an int ``__chg`` flag
+    (1 = this row changed; a shrinking set emits ``F.lit(0)``), which
+    is checkpointed lazily; ONE aggregate job reads ``count(*)`` and
+    ``sum(__chg)`` and materializes the checkpoint.  Stops when no row
+    changed and the count equals the previous round's (``n``: the
+    caller's starting count; ``None`` = the flags decide round 1);
+    running out of ``max_iter`` first warns.  Returns the state without
+    ``__chg``.  A caller on the small-loop diet calls it inside its
+    ``_small_loop_mode`` block, its step closing over the hint."""
+    for _ in range(max_iter):
+        nxt = step(state).localCheckpoint(eager=False)
+        rows, changed = nxt.agg(F.count(F.lit(1)), F.sum("__chg")).first()
+        state = nxt.drop("__chg")
+        if not changed and n in (None, rows):
+            return state
+        n = rows
+    _warn_budget(name, "max_iter", max_iter)
+    return state
+
+
 def _rank_loop(verts: DataFrame, edges_share: DataFrame,
                damping: float, max_iter: int, checkpoint_every: int,
                out_name: str, teleport: DataFrame | None = None) -> DataFrame:
@@ -684,8 +716,7 @@ def connected_components(graph: Graph, max_iter: int = 50) -> DataFrame:
 
     Convergence needs <= diameter supersteps (world trade graphs:
     tiny; 100-TB web graphs: ~20).  Each superstep is one edge-sized
-    join + vertex-sized min-aggregate, lineage truncated per step; the
-    fixpoint test is a 1-row count of changed labels.  (The
+    join + vertex-sized min-aggregate, one :func:`_fixpoint` round.  (The
     large-star/small-star algorithm halves superstep count for
     pathological chains; min-propagation is the simple, shuffle-
     minimal default.)
@@ -710,27 +741,17 @@ def connected_components(graph: Graph, max_iter: int = 50) -> DataFrame:
     both = ue.union(ue.select(F.col("b").alias("a"), F.col("a").alias("b")))
     small = n_labels <= 10_000_000
     with _small_loop_mode(ue.sparkSession, small, ue) as _b:
-        for _ in range(max_iter):
+        def propagate(labels: DataFrame) -> DataFrame:
             neigh = (both.join(_b(labels), both.a == labels.id)
                      .groupBy(F.col("b").alias("id"))
                      .agg(F.min("component").alias("nbr_min")))
             relaxed = F.least(F.col("component"),
                               F.coalesce(F.col("nbr_min"), F.col("component")))
-            # the fixpoint count rides the SAME job that materializes the
-            # superstep checkpoint (a __chg flag summed by a scan-sized
-            # agg) instead of a separate join-back against the previous
-            # labels -- one action per superstep, no second scan (the same
-            # fusion as Borůvka's pointer doubling)
-            new = (labels.join(_b(neigh), "id", "left")
-                   .select("id", relaxed.alias("component"),
-                           (relaxed != F.col("component")).cast("int")
-                           .alias("__chg"))
-                   .localCheckpoint(eager=False))
-            changed = new.agg(F.sum("__chg")).first()[0]
-            labels = new.select("id", "component")
-            if not changed:
-                break
-    return labels
+            return (labels.join(_b(neigh), "id", "left")
+                    .select("id", relaxed.alias("component"),
+                            (relaxed != F.col("component")).cast("int")
+                            .alias("__chg")))
+        return _fixpoint("connected_components", labels, propagate, max_iter)
 
 
 def strongly_connected_components(graph: Graph, max_pivots: int = 50,
@@ -765,38 +786,50 @@ def strongly_connected_components(graph: Graph, max_pivots: int = 50,
     edges = (graph.edges.select("src", "dst")
              .where(F.col("src") != F.col("dst"))
              .distinct().localCheckpoint())
-    remaining = graph.vertices.select("id").localCheckpoint()
-    done: DataFrame | None = None
 
-    def finish(extra: DataFrame) -> DataFrame:
-        nonlocal done
-        done = extra if done is None else done.union(extra)
-        done = done.localCheckpoint()
-        return done
+    def within(rem: DataFrame) -> DataFrame:
+        return (edges.join(rem.select(F.col("id").alias("src")), "src",
+                           "left_semi")
+                .join(rem.select(F.col("id").alias("dst")), "dst",
+                      "left_semi"))
 
+    def trim(state: DataFrame) -> DataFrame:
+        # a live vertex stays live with an out- AND an in-edge inside
+        # the live set (a peeled one is a singleton SCC): tag each
+        # vertex with the ends of the live edges it holds and read all
+        # three flags off ONE aggregate
+        e_r = within(state.where("live"))
+        tags = (state.select("id", F.col("live").cast("int").alias("__l"),
+                             F.lit(0).alias("__o"), F.lit(0).alias("__i"))
+                .union(e_r.select(F.col("src").alias("id"), F.lit(0),
+                                  F.lit(1), F.lit(0)))
+                .union(e_r.select(F.col("dst").alias("id"), F.lit(0),
+                                  F.lit(0), F.lit(1))))
+        live = (F.col("__o") + F.col("__i")) == 2
+        return (tags.groupBy("id")
+                .agg(*(F.max(c).alias(c) for c in ("__l", "__o", "__i")))
+                .select("id", live.alias("live"),
+                        (F.col("__l") - live.cast("int")).alias("__chg")))
+
+    state = graph.vertices.select("id", F.lit(True).alias("live"))
+    n = graph.vertices.count()
+    # every piece is a checkpoint or a filter over one: their union is
+    # never re-checkpointed (that copied the output once per round)
+    pieces = []
     for _ in range(max_pivots):
         # TRIM: peel zero-in/zero-out vertices of the remaining
-        # subgraph until none are left
-        while True:
-            e_r = (edges
-                   .join(remaining.select(F.col("id").alias("src")),
-                         "src", "left_semi")
-                   .join(remaining.select(F.col("id").alias("dst")),
-                         "dst", "left_semi").localCheckpoint())
-            core = (e_r.select(F.col("src").alias("id")).distinct()
-                    .join(e_r.select(F.col("dst").alias("id")).distinct(),
-                          "id"))
-            trivial = remaining.join(core, "id", "left_anti") \
-                .localCheckpoint()
-            if trivial.isEmpty():
-                break
-            finish(trivial.select("id", F.col("id").alias("scc_id")))
-            remaining = remaining.join(trivial, "id", "left_anti") \
-                .localCheckpoint()
-        if remaining.isEmpty():
-            break
+        # subgraph until none are left; a round that peels none is the
+        # fixpoint, so n + 1 rounds always reach it
+        state = _fixpoint("strongly_connected_components", state, trim,
+                          n + 1)
+        pieces.append(state.where(~F.col("live"))
+                      .select("id", F.col("id").alias("scc_id")))
+        remaining = state.where("live").select("id")
         # PIVOT: min remaining id; SCC = fwd-reach ∩ bwd-reach
-        pivot = remaining.agg(F.min("id")).first()[0]
+        pivot, n = remaining.agg(F.min("id"), F.count(F.lit(1))).first()
+        if pivot is None:
+            break
+        e_r = within(remaining)
         sub = Graph(remaining, e_r)
         rsub = Graph(remaining, e_r.select(F.col("dst").alias("src"),
                                            F.col("src").alias("dst")))
@@ -804,21 +837,23 @@ def strongly_connected_components(graph: Graph, max_pivots: int = 50,
             .where(F.col("dist").isNotNull()).select("id")
         bwd = bfs_hops(rsub, [pivot], max_hops=max_hops) \
             .where(F.col("dist").isNotNull()).select("id")
-        scc = fwd.join(bwd, "id").localCheckpoint()
-        finish(scc.select("id", F.lit(pivot).alias("scc_id")))
-        remaining = remaining.join(scc, "id", "left_anti").localCheckpoint()
-    if not remaining.isEmpty():
-        import warnings
-        warnings.warn(
-            f"scc: {remaining.count()} vertices unassigned after "
-            f"max_pivots={max_pivots} rounds; labeling them as "
-            "singletons (upper bound)", RuntimeWarning, stacklevel=2)
-        finish(remaining.select("id", F.col("id").alias("scc_id")))
-    out = done if done is not None else graph.vertices.select(
-        "id", F.col("id").alias("scc_id"))
+        scc = fwd.join(bwd, "id").localCheckpoint(eager=False)
+        pieces.append(scc.select("id", F.lit(pivot).alias("scc_id")))
+        n -= scc.count()
+        if not n:
+            break
+        state = (remaining.join(scc, "id", "left_anti")
+                 .withColumn("live", F.lit(True)))
+    else:
+        if n:
+            warnings.warn(
+                f"scc: {n} vertices unassigned after "
+                f"max_pivots={max_pivots} rounds; labeling them as "
+                "singletons (upper bound)", RuntimeWarning, stacklevel=2)
+        pieces.append(state.select("id", F.col("id").alias("scc_id")))
     w = Window.partitionBy("scc_id")
-    return out.select("id", "scc_id",
-                      F.count(F.lit(1)).over(w).alias("scc_size"))
+    return reduce(DataFrame.union, pieces).select(
+        "id", "scc_id", F.count(F.lit(1)).over(w).alias("scc_size"))
 
 
 def _bfs_edges(graph: Graph, directed: bool) -> DataFrame:
@@ -871,7 +906,7 @@ def _frontier_bfs(name: str, frontier: DataFrame, keys: list, step,
             if nxt.isEmpty():
                 break
             if hop > max_hops:
-                _warn_hop_budget(name, max_hops)
+                _warn_budget(name, "max_hops", max_hops)
                 break
             visited = visited.union(nxt)
             frontier = nxt
@@ -1059,32 +1094,19 @@ def sssp(graph: Graph, sources: list, weight_col: str = "cost",
         .alias("dist"))
         .localCheckpoint())
 
-    changed = -1
-    for _ in range(max_iter):
-        relax = (edges.join(dist.select(F.col("id").alias("src"),
-                                        F.col("dist").alias("du")), "src")
-                 .where(F.col("du").isNotNull())
-                 .groupBy(F.col("dst").alias("id"))
-                 .agg(F.min(F.col("du") + F.col("w")).alias("cand")))
-        new = (dist.join(relax, "id", "left")
-               .select("id", F.least(F.coalesce("dist", F.col("cand")),
-                                     F.coalesce("cand", F.col("dist")))
-                       .alias("dist"))
-               .localCheckpoint(eager=False))
-        changed = (new.alias("n").join(dist.alias("o"), "id")
-                   .where(~F.col("n.dist").eqNullSafe(F.col("o.dist")))
-                   .count())
-        dist = new
-        if changed == 0:
-            break
-    if changed != 0:
-        import warnings
-        warnings.warn(
-            f"sssp: exited after max_iter={max_iter} supersteps without "
-            "reaching the fixpoint; distances are upper bounds (the "
-            "weighted diameter exceeds max_iter)", RuntimeWarning,
-            stacklevel=2)
-    return dist
+    def relax(dist: DataFrame) -> DataFrame:
+        cand = (edges.join(dist.select(F.col("id").alias("src"),
+                                       F.col("dist").alias("du")), "src")
+                .where(F.col("du").isNotNull())
+                .groupBy(F.col("dst").alias("id"))
+                .agg(F.min(F.col("du") + F.col("w")).alias("cand")))
+        new = F.least(F.coalesce("dist", F.col("cand")),
+                      F.coalesce("cand", F.col("dist")))
+        return (dist.join(cand, "id", "left")
+                .select("id", new.alias("dist"),
+                        (~new.eqNullSafe(F.col("dist"))).cast("int")
+                        .alias("__chg")))
+    return _fixpoint("sssp", dist, relax, max_iter)
 
 
 def label_propagation(graph: Graph, max_iter: int = 4) -> DataFrame:
@@ -1207,24 +1229,16 @@ def k_core(graph: Graph, k: int, max_iter: int = 50) -> DataFrame:
     both = (ue.union(ue.select(F.col("b").alias("a"),
                                F.col("a").alias("b")))
             .localCheckpoint())
-    n_edges = both.count()
-    for _ in range(max_iter):
-        if n_edges == 0:
-            both = both.limit(0)
-            break
-        keep = (both.groupBy(F.col("a").alias("id"))
+
+    def peel(e: DataFrame) -> DataFrame:
+        keep = (e.groupBy(F.col("a").alias("id"))
                 .agg(F.count(F.lit(1)).alias("deg"))
                 .where(F.col("deg") >= k)
                 .select("id"))
-        nxt = (both.join(keep.withColumnRenamed("id", "a"), "a", "left_semi")
-               .join(keep.withColumnRenamed("id", "b"), "b", "left_semi")
-               .select("a", "b")
-               .localCheckpoint(eager=False))
-        n_nxt = nxt.count()
-        both, changed = nxt, n_nxt != n_edges
-        n_edges = n_nxt
-        if not changed:
-            break
+        return (e.join(keep.withColumnRenamed("id", "a"), "a", "left_semi")
+                .join(keep.withColumnRenamed("id", "b"), "b", "left_semi")
+                .select("a", "b", F.lit(0).alias("__chg")))
+    both = _fixpoint("k_core", both, peel, max_iter, both.count())
     survivors = both.select("a").distinct().withColumnRenamed("a", "id")
     return (graph.vertices.select("id")
             .join(survivors.withColumn("in_kcore", F.lit(True)), "id", "left")
@@ -1284,8 +1298,7 @@ def condensation(graph: Graph, max_iter: int = 50) -> DataFrame:
               .where(F.col("csrc") != F.col("cdst"))
               .select("csrc", "cdst").distinct().localCheckpoint())
 
-    levels = comps.select("comp", F.lit(0).alias("level"))
-    for _ in range(max_iter):
+    def deepen(levels: DataFrame) -> DataFrame:
         nxt = (comps.select("comp")
                .join(cedges, comps.comp == cedges.cdst, "left")
                .join(levels.withColumnRenamed("comp", "__p")
@@ -1293,14 +1306,13 @@ def condensation(graph: Graph, max_iter: int = 50) -> DataFrame:
                      F.col("csrc") == F.col("__p"), "left")
                .groupBy("comp")
                .agg(F.coalesce(F.max(F.col("__plvl") + 1), F.lit(0))
-                    .alias("level"))
-               .localCheckpoint())
-        changed = (nxt.join(levels.withColumnRenamed("level", "__old"),
-                            "comp")
-                   .where(F.col("level") != F.col("__old")).count())
-        levels = nxt
-        if changed == 0:
-            break
+                    .alias("level")))
+        return (nxt.join(levels.withColumnRenamed("level", "__old"), "comp")
+                .select("comp", "level", (F.col("level") != F.col("__old"))
+                        .cast("int").alias("__chg")))
+    levels = _fixpoint("condensation",
+                       comps.select("comp", F.lit(0).alias("level")),
+                       deepen, max_iter)
     return (comps.join(levels, "comp")
             .select("comp", "n_members", "level"))
 
@@ -1699,6 +1711,13 @@ def boruvka_mst(vertices: DataFrame, uedges: DataFrame,
     small = comp.count() <= 10_000_000
     mst = None
     with _small_loop_mode(vertices.sparkSession, small, edges) as _b:
+        def jump(parent: DataFrame) -> DataFrame:
+            pj = _b(parent.select(F.col("c").alias("__jc"),
+                                  F.col("p").alias("__jp")))
+            p = F.coalesce("__jp", "p")
+            return (parent.join(pj, parent.p == pj.__jc, "left")
+                    .select("c", p.alias("p"),
+                            (p != F.col("p")).cast("int").alias("__chg")))
         for _ in range(max_rounds):
             ca = _b(comp.select(F.col("id").alias("a"),
                                 F.col("component").alias("__ca")))
@@ -1760,24 +1779,9 @@ def boruvka_mst(vertices: DataFrame, uedges: DataFrame,
                                           F.col("c"))
                               .otherwise(F.col("p")).alias("p"))
                       .localCheckpoint())
-            # pointer doubling: parent <- parent(parent) until fixpoint.
-            # The changed-count rides the SAME job that materializes the
-            # jumped checkpoint (a __chg flag summed by a scan-sized agg)
-            # instead of a separate join-back against the previous parent
-            # -- one action per doubling step, no second scan.
-            while True:
-                pj = _b(parent.select(F.col("c").alias("__jc"),
-                                      F.col("p").alias("__jp")))
-                jumped = (parent.join(pj, parent.p == pj.__jc, "left")
-                          .select("c",
-                                  F.coalesce("__jp", "p").alias("p"),
-                                  (F.coalesce("__jp", "p") != F.col("p"))
-                                  .cast("int").alias("__chg"))
-                          .localCheckpoint(eager=False))
-                changed = jumped.agg(F.sum("__chg")).first()[0]
-                parent = jumped.select("c", "p")
-                if not changed:
-                    break
+            # pointer doubling: parent <- parent(parent) until fixpoint;
+            # 64 doublings span any chain of long ids
+            parent = _fixpoint("boruvka_mst", parent, jump, 64)
             relab = _b(parent.select(F.col("c").alias("component"),
                                      F.col("p").alias("__new")))
             # left join: components with no live edge keep their label
@@ -1900,9 +1904,8 @@ def k_truss(graph: Graph, k: int = 4, max_iter: int = 100) -> DataFrame:
     Output: every original undirected edge with ``in_truss``."""
     ue = (undirected_edges(graph.edges).select("a", "b")
           .distinct().localCheckpoint())
-    cur = ue
-    n_prev = cur.count()
-    for _ in range(max_iter):
+
+    def peel(cur: DataFrame) -> DataFrame:
         sym = cur.union(cur.select(F.col("b").alias("a"),
                                    F.col("a").alias("b")))
         x = sym.select(F.col("a").alias("wa"), F.col("b").alias("wc"))
@@ -1912,18 +1915,10 @@ def k_truss(graph: Graph, k: int = 4, max_iter: int = 100) -> DataFrame:
                   .groupBy(F.col("wa").alias("a"),
                            F.col("wb").alias("b"))
                   .agg(F.count(F.lit(1)).alias("sup")))
-        # lazy checkpoint + count: the fixpoint count materializes the
-        # round's checkpoint in the same job (eager paid two)
-        kept = (cur.join(wedges, ["a", "b"], "left")
+        return (cur.join(wedges, ["a", "b"], "left")
                 .where(F.coalesce("sup", F.lit(0)) >= k - 2)
-                .select("a", "b").localCheckpoint(eager=False))
-        # fixpoint test reuses last round's count (cur was counted
-        # when it was kept) -- recounting it was a duplicate job
-        n_kept = kept.count()
-        cur = kept
-        if n_kept == n_prev:
-            break
-        n_prev = n_kept
+                .select("a", "b", F.lit(0).alias("__chg")))
+    cur = _fixpoint("k_truss", ue, peel, max_iter, ue.count())
     return (ue.join(cur.select("a", "b",
                                F.lit(True).alias("in_truss")),
                     ["a", "b"], "left")

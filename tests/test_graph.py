@@ -273,6 +273,41 @@ def test_sssp_warns_when_unconverged(spark):
     assert any("max_iter" in str(w.message) for w in caught)
 
 
+def test_fixpoint_loops_warn_when_unconverged(spark, monkeypatch):
+    """Every loop on the fixpoint driver says so when its iteration
+    budget runs out first: k-core, k-truss, the condensation levels and
+    the distributed connected components, on a 10-vertex chain with a
+    ``max_iter`` below its depth.  The default budgets converge on the
+    same chain without a word."""
+    import warnings
+
+    from graphdb_cia_factbook_spark.operators import graph as gmod
+    from graphdb_cia_factbook_spark.session import clear_scratch
+
+    monkeypatch.setattr(gmod, "_ONE_TASK_ROWS", 0)  # distributed CC
+    v = spark.createDataFrame([(i,) for i in range(10)], "id bigint")
+    e = spark.createDataFrame([(i, i + 1) for i in range(9)],
+                              "src bigint, dst bigint")
+    chain = Graph(v, e)
+    loops = {"k_core": lambda **kw: gmod.k_core(chain, 2, **kw),
+             "k_truss": lambda **kw: gmod.k_truss(chain, 3, **kw),
+             "condensation": lambda **kw: gmod.condensation(chain, **kw),
+             "connected_components":
+                 lambda **kw: gmod.connected_components(chain, **kw)}
+    for name, run in loops.items():
+        with pytest.warns(RuntimeWarning, match=f"{name}: iteration "
+                          "budget 1 exhausted before the fixpoint"):
+            run(max_iter=1).collect()
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        got = {name: run().collect() for name, run in loops.items()}
+    clear_scratch(spark)
+    assert not any(r.in_kcore for r in got["k_core"])
+    assert not any(r.in_truss for r in got["k_truss"])
+    assert sorted(r.level for r in got["condensation"]) == list(range(10))
+    assert {r.component for r in got["connected_components"]} == {0}
+
+
 def test_scc_cycles_and_singletons(spark):
     """Two directed cycles bridged by a one-way edge plus an isolated
     vertex: each cycle is one SCC (labeled by its min member), the

@@ -1651,8 +1651,12 @@ def test_counted_scores_sliced_equals_single_pass(spark, docs):
     orig = dedup._counted_scores
 
     def forced(pairs, side, id_col, raw_pairs, score, **kw):
+        # a budget of a third of the measured volume: a few slices, not
+        # one per 50 pairs (each slice is a sequential parquet pass)
+        budget = max(1, raw_pairs // 3)
+        assert raw_pairs // budget + 1 >= 2  # really sliced
         return orig(pairs, side, id_col, raw_pairs, score,
-                    max_pairs_per_pass=50)
+                    max_pairs_per_pass=budget)
     with mock.patch.object(dedup, "_counted_scores", side_effect=forced):
         got = {(r.id_a, r.id_b, r.jaccard)
                for r in dedup.ngram_jaccard_dedup(

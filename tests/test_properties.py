@@ -798,3 +798,126 @@ def test_bridges_match_networkx(spark, graph):
     want_bridges = {(min(e), max(e)) for e in nx.bridges(ug)}
     assert got == {(min(e), max(e)): (min(e), max(e)) in want_bridges
                    for e in ug.edges()}
+
+
+def _simple_undirected(g):
+    """The undirected graph without self-loops (what k-core and
+    k-truss peel)."""
+    import networkx as nx
+    ug = g.to_undirected()
+    ug.remove_edges_from(list(nx.selfloop_edges(ug)))
+    return ug
+
+
+@given(graph=digraphs())
+@settings(**BFS_SETTINGS)
+def test_scc_matches_networkx(spark, graph):
+    """Every vertex is labeled with the min member of its networkx
+    strongly connected component and that component's size."""
+    import networkx as nx
+
+    from graphdb_cia_factbook_spark.operators.graph import (
+        strongly_connected_components,
+    )
+    from graphdb_cia_factbook_spark.session import clear_scratch
+    verts, edges, _ = graph
+    g, sg = _nx_and_spark(spark, verts, edges)
+    got = {r.id: (r.scc_id, r.scc_size)
+           for r in strongly_connected_components(sg).collect()}
+    clear_scratch(spark)
+    assert got == {v: (min(c), len(c))
+                   for c in nx.strongly_connected_components(g) for v in c}
+
+
+@given(graph=digraphs(), k=st.integers(1, 3))
+@settings(**BFS_SETTINGS)
+def test_k_core_matches_networkx(spark, graph, k):
+    """``in_kcore`` holds exactly for the vertices of ``nx.k_core`` of
+    the simple undirected graph (an isolated vertex is in no core)."""
+    import networkx as nx
+
+    from graphdb_cia_factbook_spark.operators.graph import k_core
+    from graphdb_cia_factbook_spark.session import clear_scratch
+    verts, edges, _ = graph
+    g, sg = _nx_and_spark(spark, verts, edges)
+    got = {r.id: r.in_kcore for r in k_core(sg, k).collect()}
+    clear_scratch(spark)
+    core = set(nx.k_core(_simple_undirected(g), k))
+    assert got == {v: v in core for v in verts}
+
+
+@given(graph=digraphs(), k=st.integers(2, 4))
+@settings(**BFS_SETTINGS)
+def test_k_truss_matches_networkx(spark, graph, k):
+    """One row per undirected non-loop edge, ``in_truss`` exactly for
+    the edges of ``nx.k_truss``."""
+    import networkx as nx
+
+    from graphdb_cia_factbook_spark.operators.graph import k_truss
+    from graphdb_cia_factbook_spark.session import clear_scratch
+    verts, edges, _ = graph
+    g, sg = _nx_and_spark(spark, verts, edges)
+    got = {(r.a, r.b): r.in_truss for r in k_truss(sg, k).collect()}
+    clear_scratch(spark)
+    ug = _simple_undirected(g)
+    truss = {(min(e), max(e)) for e in nx.k_truss(ug, k).edges()}
+    assert got == {(min(e), max(e)): (min(e), max(e)) in truss
+                   for e in ug.edges()}
+
+
+@given(graph=digraphs(), data=st.data())
+@settings(**BFS_SETTINGS)
+def test_sssp_matches_networkx(spark, graph, data):
+    """Weighted distances from a source set with drawn non-negative
+    integer costs (a duplicate edge keeps its cheapest cost) are the
+    per-target minimum of the single-source Dijkstra distances;
+    unreached vertices get NULL."""
+    import networkx as nx
+
+    from graphdb_cia_factbook_spark.operators.graph import Graph, sssp
+    from graphdb_cia_factbook_spark.session import clear_scratch
+    verts, edges, sources = graph
+    costs = data.draw(st.lists(st.integers(0, 9), min_size=len(edges),
+                               max_size=len(edges)))
+    g = nx.DiGraph()
+    g.add_nodes_from(verts)
+    for (s, t), c in zip(edges, costs):
+        if not g.has_edge(s, t) or g[s][t]["cost"] > c:
+            g.add_edge(s, t, cost=c)
+    sg = Graph(spark.createDataFrame([(v,) for v in verts], "id bigint"),
+               spark.createDataFrame(
+                   [(s, t, c) for (s, t), c in zip(edges, costs)],
+                   "src bigint, dst bigint, cost bigint"))
+    want = {v: None for v in verts}
+    for s in sources:
+        for v, d in nx.single_source_dijkstra_path_length(
+                g, s, weight="cost").items():
+            want[v] = d if want[v] is None else min(want[v], d)
+    got = {r.id: r.dist for r in sssp(sg, sources).collect()}
+    clear_scratch(spark)
+    assert got == want
+
+
+@given(graph=digraphs())
+@settings(**BFS_SETTINGS)
+def test_condensation_levels_match_networkx(spark, graph):
+    """One row per strongly connected component (named by its min
+    member) with its size and its longest-path depth in
+    ``nx.condensation`` (0 = no upstream component)."""
+    import networkx as nx
+
+    from graphdb_cia_factbook_spark.operators.graph import condensation
+    from graphdb_cia_factbook_spark.session import clear_scratch
+    verts, edges, _ = graph
+    g, sg = _nx_and_spark(spark, verts, edges)
+    got = {r.comp: (r.n_members, r.level)
+           for r in condensation(sg).collect()}
+    clear_scratch(spark)
+    dag = nx.condensation(g)
+    depth = {}
+    for c in nx.topological_sort(dag):
+        depth[c] = max((depth[p] + 1 for p in dag.predecessors(c)),
+                       default=0)
+    members = nx.get_node_attributes(dag, "members")
+    assert got == {min(members[c]): (len(members[c]), depth[c])
+                   for c in dag}

@@ -104,10 +104,10 @@ def test_loop_exception_restores_confs(spark, monkeypatch):
     """An exception inside a scoped loop still restores the confs."""
     from graphdb_cia_factbook_spark.operators import graph as gmod
 
-    def out_of_budget(fn_name, max_hops):
-        raise RuntimeError(f"{fn_name}: budget {max_hops}")
+    def out_of_budget(fn_name, option, budget):
+        raise RuntimeError(f"{fn_name}: budget {budget}")
 
-    monkeypatch.setattr(gmod, "_warn_hop_budget", out_of_budget)
+    monkeypatch.setattr(gmod, "_warn_budget", out_of_budget)
     v = spark.createDataFrame([(i,) for i in range(4)], "id bigint")
     e = spark.createDataFrame([(0, 1), (1, 2), (2, 3)],
                               "src bigint, dst bigint")
@@ -157,15 +157,59 @@ def test_conf_writes_only_in_scoped_conf_and_entry_hygiene():
         ("session", "scoped_conf"), ("registry", "_prepare_session")}
 
 
+_BUDGET_WARNERS = {("graph", "_warn_budget"), ("graph", "_frontier_bfs"),
+                   ("graph", "_fixpoint")}
+
+
 def test_bfs_family_runs_through_one_driver():
     """One superstep loop for the BFS family: the hop-budget warning
     and the small-loop diet of ``bfs_hops``, the multi-root closures
-    and ``bridges`` live only in ``graph._frontier_bfs``."""
-    assert _engine_callers(r"_warn_hop_budget\(") == {
-        ("graph", "_warn_hop_budget"), ("graph", "_frontier_bfs")}
+    and ``bridges`` live only in ``graph._frontier_bfs`` (the budget
+    warning is shared with the fixpoint driver)."""
+    assert _engine_callers(r"_warn_budget\(") == _BUDGET_WARNERS
     family = {("graph", f) for f in ("bfs_hops", "_multi_root_bfs", "step",
                                      "bridges")}
     assert not _engine_callers(r"_small_loop_mode\(") & family
+
+
+def test_fixpoint_loops_run_through_one_driver():
+    """One iterate-until-nothing-changes loop: the ``__chg`` probe sum
+    lives only in ``graph._fixpoint``, the budget warning only there
+    and in ``_frontier_bfs``, and no loop in the graph module is an
+    unbounded ``while True`` (connected components, SSSP, k-core,
+    k-truss, condensation, Borůvka's pointer doubling and the SCC trim
+    all run on the driver)."""
+    assert _engine_callers(r"F\.sum\(\"__chg\"\)") == {("graph", "_fixpoint")}
+    assert _engine_callers(r"_warn_budget\(") == _BUDGET_WARNERS
+    assert not {c for c in _engine_callers(r"while\s+True")
+                if c[0] == "graph"}
+
+
+def test_fixpoint_round_is_one_job(spark):
+    """A fixpoint round costs one Spark job: the aggregate that reads
+    the round's row count and change flags also materializes its lazy
+    checkpoint.  k-core with k=2 on a triangle with a two-edge tail
+    peels the tail in two rounds and confirms the triangle in a third;
+    its only other jobs are the eager checkpoint of the starting edge
+    table and its count.  AQE is off for the check (see
+    ``test_one_task_gate_is_one_job``)."""
+    from graphdb_cia_factbook_spark.operators.graph import Graph, k_core
+
+    v = spark.createDataFrame([(i,) for i in range(1, 6)], "id bigint")
+    e = spark.createDataFrame([(1, 2), (2, 3), (3, 1), (3, 4), (4, 5)],
+                              "src bigint, dst bigint")
+    sc = spark.sparkContext
+    group = "test_fixpoint_round_is_one_job"
+    try:
+        with scoped_conf(spark, {AQE: "false"}):
+            sc.setJobGroup(group, group)
+            df = k_core(Graph(v, e), 2)
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2 + 3
+        assert {r.id for r in df.collect() if r.in_kcore} == {1, 2, 3}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        clear_scratch(spark)
 
 
 def test_only_the_scope_code_releases_state():
